@@ -9,6 +9,8 @@ import json, math, re, sys
 def load(p):
     txt = open(p).read().replace("\\", "")
     m = re.search(r'"queries":\{([^}]*)\}', txt)
+    if m is None:
+        sys.exit(f"{p}: no \"queries\" block; not a full bench record")
     qs = {}
     for k, v in re.findall(r'"([A-Za-z0-9_]+)":([0-9]+\.[0-9Ee+-]+)', m.group(1)):
         qs[k] = float(v)
@@ -17,6 +19,8 @@ def load(p):
 a, b = load(sys.argv[1]), load(sys.argv[2])
 thr = float(sys.argv[3]) if len(sys.argv) > 3 else 0.0
 common = sorted(set(a) & set(b))
+if not common:
+    sys.exit("no gates in common; nothing to compare")
 rows = [(k, a[k], b[k], a[k] - b[k], a[k] / b[k] if b[k] > 0 else float("inf"))
         for k in common]
 rows.sort(key=lambda r: -abs(r[3]))
@@ -25,10 +29,11 @@ for k, va, vb, d, r in rows:
     if abs(d) >= thr:
         print(f"{k:30s} {va:8.3f} {vb:8.3f} {d:+8.3f} {r:8.2f}x")
 ta, tb = sum(a[k] for k in common), sum(b[k] for k in common)
-geo = math.exp(sum(math.log(a[k] / b[k]) for k in common if a[k] > 0 and b[k] > 0)
-               / len(common))
+logs = [math.log(a[k] / b[k]) for k in common if a[k] > 0 and b[k] > 0]
+total = f"{ta / tb:.3f}x" if tb > 0 else "n/a"
+geo = f"{math.exp(sum(logs) / len(logs)):.3f}x over {len(logs)}" if logs else "n/a"
 print(f"\ncommon gates: {len(common)}  total before {ta:.1f}s  after {tb:.1f}s  "
-      f"(total speedup {ta/tb:.3f}x, per-gate geomean {geo:.3f}x)")
+      f"(total speedup {total}, per-gate geomean {geo})")
 only_a = set(a) - set(b); only_b = set(b) - set(a)
 if only_a: print("only in A:", sorted(only_a))
 if only_b: print("only in B:", sorted(only_b))

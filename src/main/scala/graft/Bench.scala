@@ -700,12 +700,15 @@ object Bench {
     val storages = results.map(_._4)
     if (storages.nonEmpty)
       println(s"""{"metric":"storage_after_release_bytes","max":${storages.max},"end":${storages.last},"nonzero_gates":${storages.count(_ > 0)}}""")
+    spark.stop()
     // LAST stdout line by design — see [[compactLine]]. Everything the
     // driver's bounded tail keeps beyond this point is compact per-gate
     // record, maximizing how many gates survive into PERF's per_query.
+    // Printed after spark.stop() and flushed, so no shutdown output can
+    // land after it.
     println(compactLine(results.map(r => (r._1, r._2)), total,
       results.collect { case (k, _, false, _, _) => k }, sfDir))
-    spark.stop()
+    System.out.flush()
     if (failed.nonEmpty) sys.exit(1)
   }
 }

@@ -342,6 +342,39 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
+/** text_counts(text, lists) → array<int>: whitespace tokens, code points,
+  * code points outside `[a-zA-Z0-9\s]`, then whole-token hits per word
+  * list ([[Kernels.textCounts]]). The lists are a plan-time constant; two
+  * calls over the same text and lists are the same expression, so
+  * subexpression elimination runs the scan once per row however many
+  * scorers read it.
+  */
+case class TextCounts(child: Expression, lists: Seq[Seq[String]])
+    extends UnaryExpression {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "graft_text_counts"
+  @transient private lazy val table = new WordLists(lists)
+  override protected def nullSafeEval(t: Any): Any =
+    Kernels.textCounts(t.asInstanceOf[UTF8String], table)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val tableRef = ctx.addReferenceObj("wordLists", table, "graft.functions.WordLists")
+    defineCodeGen(ctx, ev, t => s"graft.functions.Kernels.textCounts($t, $tableRef)")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
+object TextCounts {
+  def fromLiteral(text: Expression, listsLit: Expression): TextCounts = {
+    require(listsLit.foldable, "graft_text_counts: word lists must be a literal")
+    val ad = listsLit.eval().asInstanceOf[ArrayData]
+    TextCounts(text, Seq.tabulate(ad.numElements()) { k =>
+      val l = ad.getArray(k)
+      Seq.tabulate(l.numElements())(i => l.getUTF8String(i).toString)
+    })
+  }
+}
+
 /** bpe_tokens(text, merges) → array<string>: apply a trained BPE merge
   * table ([[Kernels.bpeTokens]]). `merges` is a foldable array<string> of
   * "left right" keys in rank order — a plan-time constant like the
@@ -509,6 +542,19 @@ object GraftFunctions {
     * are the only reference kinds that are free to re-read; this helper
     * manufactures the former: a one-element array, a transform binding the
     * value to a lambda variable, and an `element_at(..., 1)` unwrap.
+    *
+    * Subexpression elimination is no rescue inside lambdas either. The
+    * higher-order functions (`filter`, `transform`, …) are
+    * `CodegenFallback` in Spark 4.1, and elimination does not look into a
+    * `CodegenFallback` expression's children, so N lambdas over the same
+    * derived array derive it N times per row (stopword counts taken this
+    * way split every `txt_langid` document six times). A per-row count that
+    * several scorers share belongs in one custom expression that
+    * elimination can see whole ([[TextCounts]]). A FILTER gets no
+    * elimination at all: pushed through a projection it inlines each
+    * reference again, which is why a filter on several [[TextCounts]]
+    * scorers reads them from a column bound by a generator
+    * ([[graft.text.TextAnalysis.withCounts]]).
     */
   def bindArray(e: Column)(body: Column => Column): Column =
     org.apache.spark.sql.functions.element_at(
@@ -572,6 +618,8 @@ object GraftFunctions {
       es => Sq8Encode(es.head), "built-in")
     reg.createOrReplaceTempFunction("graft_sq8_dot",
       es => Sq8Dot(es(0), es(1)), "built-in")
+    reg.createOrReplaceTempFunction("graft_text_counts",
+      es => TextCounts.fromLiteral(es(0), es(1)), "built-in")
   }
 
   def cosineSim(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
@@ -616,6 +664,11 @@ object GraftFunctions {
     * line kept in order, blanks exempt. */
   def dedupLines(lines: Column): Column =
     call_function("graft_dedup_lines", lines)
+
+  /** Per-document token, character and word-list counts ([[TextCounts]]). */
+  def textCounts(text: Column, lists: Seq[Seq[String]]): Column =
+    call_function("graft_text_counts", text,
+      org.apache.spark.sql.functions.typedlit(lists))
 
   /** Int8 scalar quantization ([[Sq8Encode]]) / quantized cosine
     * ([[Sq8Dot]]). */

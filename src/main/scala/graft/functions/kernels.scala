@@ -1,7 +1,70 @@
 package graft.functions
 
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
+
+/** Plan-time word lists for [[Kernels.textCounts]]: every distinct word of
+  * the lists, with a bitmask of the lists that hold it, in an
+  * open-addressing table keyed by the same `31·h + byte` hash the kernel
+  * folds while it scans a token. A probe allocates nothing. At most 32
+  * lists.
+  */
+final class WordLists(lists: Seq[Seq[String]]) extends Serializable {
+  require(lists.size <= 32, s"at most 32 word lists, got ${lists.size}")
+  val numLists: Int = lists.size
+
+  private val (words, masks) = {
+    val byWord = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+    for ((ws, k) <- lists.zipWithIndex; w <- ws)
+      byWord(w) = byWord.getOrElse(w, 0) | (1 << k)
+    (byWord.keys.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray,
+      byWord.values.toArray)
+  }
+  private val maxLen = if (words.isEmpty) -1 else words.map(_.length).max
+  private val slotMask = Integer.highestOneBit(math.max(words.length, 1) * 4) - 1
+  private val slots: Array[Int] = {
+    val t = new Array[Int](slotMask + 1) // word index + 1; 0 = empty
+    for (w <- words.indices) {
+      var slot = WordLists.slot(WordLists.hash(words(w)), slotMask)
+      while (t(slot) != 0) slot = (slot + 1) & slotMask
+      t(slot) = w + 1
+    }
+    t
+  }
+
+  /** Add one to `out(3 + k)` for every list k holding the `len` bytes at
+    * (`base`, `off`), whose hash is `h`.
+    */
+  def countHits(base: AnyRef, off: Long, len: Int, h: Int, out: Array[Int]): Unit =
+    if (len <= maxLen) {
+      var slot = WordLists.slot(h, slotMask)
+      var w = slots(slot)
+      while (w != 0) {
+        val word = words(w - 1)
+        if (word.length == len && org.apache.spark.unsafe.array.ByteArrayMethods
+            .arrayEquals(base, off, word, Platform.BYTE_ARRAY_OFFSET, len)) {
+          var m = masks(w - 1)
+          while (m != 0) {
+            out(3 + Integer.numberOfTrailingZeros(m)) += 1
+            m &= m - 1
+          }
+          return
+        }
+        slot = (slot + 1) & slotMask
+        w = slots(slot)
+      }
+    }
+}
+
+object WordLists {
+  private def hash(bytes: Array[Byte]): Int = bytes.foldLeft(0)((h, b) => 31 * h + b)
+  private def slot(h: Int, mask: Int): Int = {
+    val x = h * 0x9e3779b9
+    (x ^ (x >>> 16)) & mask
+  }
+}
 
 /** JVM kernels behind the custom Catalyst expressions. Top-level objects get
   * static forwarders, so generated (Janino) code can call these directly —
@@ -21,6 +84,74 @@ object Kernels {
       i += 1
     }
     h
+  }
+
+  // ASCII classes for [[textCounts]]: the `\s` of `split(_, "\\s+")` and
+  // `[a-zA-Z0-9]`, the two sets the scorers' counts are defined over.
+  private final val Ws = 1
+  private final val Alnum = 2
+  private val asciiClass: Array[Byte] = Array.tabulate[Byte](128) { c =>
+    if (" \t\n\u000b\f\r".indexOf(c) >= 0) Ws.toByte
+    else if (Character.isLetterOrDigit(c)) Alnum.toByte
+    else 0
+  }
+
+  /** Per-document counts behind the [[graft.text.TextAnalysis]] scorers, in
+    * one pass over the UTF-8 bytes (no String, no regex, no token array):
+    *   - 0: whitespace tokens, exactly `size(split(trim(s), "\\s+"))` —
+    *     `trim` strips only U+0020, the delimiter is a run of
+    *     `[ \t\n\x0B\f\r]`, and with limit −1 a leading or trailing run
+    *     still yields an empty token, so `""` is one token;
+    *   - 1: code points (`length(s)`);
+    *   - 2: code points outside `[a-zA-Z0-9\s]` (`length` of the text with
+    *     that class removed);
+    *   - 3 + k: tokens equal byte for byte to a word of list k.
+    * Counts code points as UTF-8 lead bytes, which is `length` on valid
+    * UTF-8 (every string Spark builds from text).
+    */
+  def textCounts(s: UTF8String, lists: WordLists): ArrayData = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    val out = new Array[Int](3 + lists.numLists)
+    var lo = 0
+    while (lo < n && Platform.getByte(base, off + lo) == ' ') lo += 1
+    var hi = n
+    while (hi > lo && Platform.getByte(base, off + hi - 1) == ' ') hi -= 1
+    var chars = n - (hi - lo) // the trimmed spaces
+    var punct = 0
+    var tokens = 0
+    var tokStart = lo
+    var h = 0
+    var inWs = false
+    var i = lo
+    while (i < hi) {
+      val b = Platform.getByte(base, off + i)
+      val cls = if (b >= 0) asciiClass(b).toInt else 0
+      if ((b & 0xc0) != 0x80) {
+        chars += 1
+        if (cls == 0) punct += 1
+      }
+      if (cls == Ws) {
+        if (!inWs) {
+          tokens += 1
+          lists.countHits(base, off + tokStart, i - tokStart, h, out)
+          inWs = true
+        }
+      } else {
+        if (inWs) { tokStart = i; h = 0; inWs = false }
+        h = 31 * h + b
+      }
+      i += 1
+    }
+    // The last token: empty when the trimmed text ends in a whitespace run.
+    if (inWs) { tokStart = hi; h = 0 }
+    tokens += 1
+    lists.countHits(base, off + tokStart, hi - tokStart, h, out)
+    out(0) = tokens
+    out(1) = chars
+    out(2) = punct
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** SimHash-64 of a token array: per-token 64-bit hashes vote on each bit;

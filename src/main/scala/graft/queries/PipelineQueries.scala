@@ -38,12 +38,14 @@ object PipelineQueries {
   }
 
   // ---------------------------------------------------------------- text
-  def txtTokens(spark: SparkSession, dir: String): DataFrame =
+  def txtTokens(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_ws_tokens"),
         TextAnalysis.bpeishTokenCount(col("text")).as("n_bpe_tokens"))
       .orderBy(col("doc_id"))
+  }
 
   /** DuckDB fragment: whitespace token count of `text`. */
   private val wsTokensFrag =
@@ -55,12 +57,14 @@ object PipelineQueries {
        |  CAST(len(regexp_extract_all(text, '[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]')) AS INT) AS n_bpe_tokens
        |FROM documents ORDER BY doc_id""".stripMargin
 
-  def txtQuality(spark: SparkSession, dir: String): DataFrame =
+  def txtQuality(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         TextAnalysis.tokenCount(col("text")).as("n_tokens"),
         TextAnalysis.qualityScore(col("text")).as("quality"))
       .orderBy(col("doc_id"))
+  }
 
   /** DuckDB fragment: the quality score of `text` (mirrors
     * TextAnalysis.qualityScore term-for-term). */
@@ -79,13 +83,15 @@ object PipelineQueries {
        |  $qualityFrag AS quality
        |FROM documents ORDER BY doc_id""".stripMargin
 
-  def txtLangId(spark: SparkSession, dir: String): DataFrame =
+  def txtLangId(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"),
         TextAnalysis.langId(col("text")).as("lang_guess"),
         TextAnalysis.langHits(col("text"), "en").as("en_hits"),
         TextAnalysis.langHits(col("text"), "de").as("de_hits"))
       .orderBy(col("doc_id"))
+  }
 
   private def hitsSql(words: Seq[String]): String =
     s"CAST(len(list_filter(string_split_regex(trim(text), '\\s+'), " +
@@ -118,11 +124,14 @@ object PipelineQueries {
     * dedup tiebreak, final accounting) is verified, not just each stage.
     */
   def pipeCleanCorpus(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
-    val scored = docs.select(col("doc_id"), col("text"),
-      TextAnalysis.tokenCount(col("text")).as("n_tokens"),
-      TextAnalysis.qualityScore(col("text")).as("quality"),
-      TextAnalysis.langId(col("text")).as("lang_guess"))
+    val c = TextAnalysis.Counts(col("__counts"))
+    val scored = TextAnalysis.withCounts(docs, col("text"), "__counts")
+      .select(col("doc_id"), col("text"),
+        c.tokens.as("n_tokens"),
+        TextAnalysis.qualityScore(c).as("quality"),
+        TextAnalysis.langId(c).as("lang_guess"))
     val filtered = scored.filter(col("quality") >= 0.5 && col("lang_guess") === "en")
     val deduped = Dedup.exact(filtered, Seq("text"), Seq(col("doc_id")))
     deduped.agg(count(lit(1)).as("n_docs"),
@@ -184,11 +193,13 @@ object PipelineQueries {
   /** Stopword ratio (the classic quality-filter signal) over the corpus,
     * rounded to 6 dp on both sides (double-division precedent).
     */
-  def txtStopwordRatio(spark: SparkSession, dir: String): DataFrame =
+  def txtStopwordRatio(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(col("doc_id"),
         round(TextAnalysis.stopwordRatio(col("text")), 6).as("stopword_ratio"))
       .orderBy(col("doc_id"))
+  }
 
   private val txtStopwordRatioSql = {
     val words = TextAnalysis.englishStopwords.map(w => s"'$w'").mkString(", ")
@@ -1588,6 +1599,7 @@ object PipelineQueries {
     * result is metadata-sized.
     */
   def pipeDatasetCard(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
     val docs = Tables.documents(spark, dir)
       .withColumn("__tok", TextAnalysis.tokenCount(col("text")))
     val volume = docs.agg(

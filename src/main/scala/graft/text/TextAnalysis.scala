@@ -6,18 +6,65 @@ import org.apache.spark.sql.functions._
 import graft.functions.GraftFunctions
 
 /** Text-analysis operators for training-data pipelines: token counting,
-  * quality scoring, language ID, document fingerprinting. All built from
-  * codegen'd built-ins (plus the custom fingerprint expression), so every
-  * scorer runs scan-local with no shuffle — at 100 TB these are pure map
-  * stages that pipeline with the parquet scan.
+  * quality scoring, language ID, document fingerprinting. Every scorer is
+  * scan-local with no shuffle — at 100 TB these are pure map stages that
+  * pipeline with the parquet scan.
+  *
+  * The count-based scorers ([[tokenCount]], [[qualityScore]],
+  * [[stopwordRatio]], [[langHits]], [[langId]]) are plain Column arithmetic
+  * over ONE codegen'd kernel call per row ([[graft.functions.TextCounts]]):
+  * each builds the same expression over the same word lists, so
+  * subexpression elimination scans a document once however many of them a
+  * projection reads (a frame that filters on them binds the counts with
+  * [[withCounts]] instead). Counting through a token array would not share:
+  * a `filter` lambda over it is interpreted (`CodegenFallback`) and hides
+  * the array from subexpression elimination, so every scorer would split
+  * the text again. The other operators here are codegen'd built-ins or
+  * custom expressions. The custom ones resolve through the session
+  * registry: call [[graft.functions.GraftFunctions.register]] before
+  * building a frame.
   */
 object TextAnalysis {
 
   /** Whitespace tokens. */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
-  /** Whitespace token count. */
-  def tokenCount(text: Column): Column = size(tokens(text))
+  /** One row's [[graft.functions.TextCounts]] over word lists `lists`:
+    * `value` is either the kernel call on a text ([[counts]]) or a column
+    * already holding it ([[withCounts]]). The scorers below are arithmetic
+    * over these fields.
+    */
+  final case class Counts(value: Column, lists: Seq[Seq[String]] = wordLists) {
+    def tokens: Column = value.getItem(0)
+    def chars: Column = value.getItem(1)
+    /** Code points outside `[a-zA-Z0-9\s]`. */
+    def punct: Column = value.getItem(2)
+    /** Whitespace tokens equal to a word of `words`, one of `lists`. */
+    def hits(words: Seq[String]): Column = {
+      val k = lists.indexOf(words)
+      require(k >= 0, s"not a counted word list: ${words.mkString(", ")}")
+      value.getItem(3 + k)
+    }
+  }
+
+  /** The kernel call on `text`. With the default lists every call is the
+    * same expression, so a projection runs it once per row.
+    */
+  def counts(text: Column, lists: Seq[Seq[String]] = wordLists): Counts =
+    Counts(GraftFunctions.textCounts(text, lists), lists)
+
+  /** `df` plus column `name` holding [[counts]] of `text`, made by a
+    * one-row generator. For frames that FILTER on scores: a filter gets no
+    * subexpression elimination, and pushed through a projection it inlines
+    * every scorer's kernel call; it cannot be pushed below a generator
+    * whose output it reads, so scores read from this column cost one
+    * kernel call per row.
+    */
+  def withCounts(df: DataFrame, text: Column, name: String): DataFrame =
+    df.select(col("*"), explode(array(counts(text).value)).as(name))
+
+  /** Whitespace token count: `size(tokens(text))`, without the array. */
+  def tokenCount(text: Column): Column = counts(text).tokens
 
   /** BPE-ish token count: letter runs, digit runs, and single punctuation
     * marks — a cheap, deterministic proxy for subword tokenizer counts.
@@ -36,24 +83,27 @@ object TextAnalysis {
   def dupNgramCharFrac(text: Column): Column =
     GraftFunctions.dupNgramFrac(tokens(text))
 
-  /** English stopword ratio among whitespace tokens. */
+  /** English stopword ratio among whitespace tokens. A list other than the
+    * scorers' own costs a kernel call of its own.
+    */
   val englishStopwords: Seq[String] =
     Seq("the", "a", "an", "and", "of", "to", "in", "is", "it", "that")
 
   def stopwordRatio(text: Column, stopwords: Seq[String] = englishStopwords): Column = {
-    val toks = tokens(text)
-    val hits = size(filter(toks, t => t.isin(stopwords: _*)))
-    hits.cast("double") / size(toks)
+    val c = counts(text,
+      if (wordLists.contains(stopwords)) wordLists else wordLists :+ stopwords)
+    c.hits(stopwords).cast("double") / c.tokens
   }
 
   /** Heuristic quality score in [0,1] — the length / punctuation / stopword
     * ratio family of filters used by web-scale corpus cleaning. All integer
     * counts ratioed in double, so engines agree bit-for-bit.
     */
-  def qualityScore(text: Column): Column = {
-    val nChars = length(text).cast("double")
-    val nTokens = tokenCount(text).cast("double")
-    val nPunct = length(regexp_replace(text, "[a-zA-Z0-9\\s]", "")).cast("double")
+  def qualityScore(text: Column): Column = qualityScore(counts(text))
+  def qualityScore(c: Counts): Column = {
+    val nChars = c.chars.cast("double")
+    val nTokens = c.tokens.cast("double")
+    val nPunct = c.punct.cast("double")
     val meanTokLen = (nChars - (nTokens - 1)) / nTokens // chars sans separators
     val lenScore = least(nTokens / lit(100.0), lit(1.0))
     val punctPenalty = least(nPunct / nChars * 5.0, lit(1.0))
@@ -74,17 +124,27 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "y", "es", "de", "un", "que"),
     "fr" -> Seq("le", "la", "et", "est", "un", "que", "les"))
 
-  def langHits(text: Column, lang: String): Column = {
-    val words = stopwordProfiles(lang)
-    size(filter(tokens(text), t => words.map(w => t === lit(w)).reduce(_ || _)))
+  def langHits(text: Column, lang: String): Column = langHits(counts(text), lang)
+  def langHits(c: Counts, lang: String): Column = c.hits(stopwordProfiles(lang))
+
+  def langId(text: Column): Column = langId(counts(text))
+  def langId(c: Counts): Column = {
+    val hs = langCodes.map(langHits(c, _))
+    val best = greatest(hs: _*)
+    // Null text ties every profile (all hits null), so the tie rule gives
+    // it the smallest code, not null.
+    langCodes.zip(hs).tail.init
+      .foldLeft(when(c.value.isNull || hs.head === best, langCodes.head)) {
+        case (w, (code, h)) => w.when(h === best, code)
+      }
+      .otherwise(langCodes.last)
   }
 
-  def langId(text: Column): Column = {
-    // array of (-hits, code) structs; min-sort → max hits, ties on asc code
-    val scored = array(stopwordProfiles.keys.toSeq.sorted.map(l =>
-      struct((-langHits(text, l)).as("neg"), lit(l).as("code"))): _*)
-    sort_array(scored).getItem(0).getField("code")
-  }
+  private val langCodes: Seq[String] = stopwordProfiles.keys.toSeq.sorted
+
+  /** The scorers' word lists, in a fixed order. */
+  private val wordLists: Seq[Seq[String]] =
+    englishStopwords +: langCodes.map(stopwordProfiles)
 
   /** Rolling-hash document fingerprint (custom codegen'd expression). */
   def fingerprint(text: Column): Column = GraftFunctions.fingerprint(text)

@@ -3799,6 +3799,7 @@ class RandomizedSpec extends AnyFunSuite {
   }
 
   test("token counts: whitespace and bpe-ish counts equal regex references") {
+    GraftFunctions.register(spark)
     val rnd = new Random(1605)
     val pieces = Seq("word", "Word2", "42", "3.14", "—", "!", "can't",
       "a_b", "x,y", " ", "\t", "\n")
