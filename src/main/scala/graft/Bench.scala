@@ -347,36 +347,43 @@ object Bench {
 
   /** Compact per-gate record for the driver's bounded stdout tail (r17
     * verdict item 2): the driver keeps only ~2000 chars of stdout, which
-    * has head-eaten the ~10 KB full record line every round since r03 —
-    * the per-query map has NEVER reached the driver. This line is printed
-    * LAST, after every other record line, so the tail's surviving suffix
-    * is all compact record; within it:
+    * has head-eaten the ~10 KB full record line every round since r03.
+    * This line is printed LAST and is one complete JSON object of at most
+    * [[CompactLineMaxBytes]] bytes, so the tail always holds all of it:
     *
-    *   - values are INTEGER MILLISECONDS (no positions, no regressions —
-    *     those live in target/bench.json and BENCH_LOCAL_rNN.json), the
-    *     most bytes-per-entry-frugal rendering of the same elapsed
-    *     numbers — a unit change in RENDERING only, declared by the
-    *     `queries_unit` field; the full-precision seconds record remains
-    *     the first stdout line, target/bench.json and BENCH_LOCAL;
-    *   - `queries` is the line's FINAL field, entries sorted
-    *     fastest-first, so a bounded tail always retains the maximum
-    *     parseable suffix and the gates nearest the end are the SLOWEST
-    *     ones — the only gates a >1 s noise floor can ever flag, i.e. the
-    *     ones a cross-round comparison actually adjudicates with.
+    *   - `value` (total seconds), `n` (gates run), `n_failed` and
+    *     `failed` (the failed gates' names, as many as fit);
+    *   - `queries`: the SLOWEST gates that fit — the only gates a >1 s
+    *     noise floor can ever flag — in INTEGER MILLISECONDS (declared by
+    *     `queries_unit`; the full-precision seconds record remains the
+    *     first stdout line, target/bench.json and BENCH_LOCAL), the final
+    *     field, sorted fastest-first;
+    *   - `omitted`: how many gates `queries` leaves out.
     *
     * Guard safety: [[baselineQueries]]' pair regex requires a decimal
-    * point, so a future record containing only this line (or its suffix)
-    * parses EMPTY and is skipped with a truncation warning — integer ms
-    * can never be mistaken for seconds by the baseline guard
-    * (spec-pinned in BenchBaselineSpec).
+    * point, so a record containing only this line parses EMPTY and is
+    * skipped with a truncation warning — integer ms can never be mistaken
+    * for seconds by the baseline guard (spec-pinned in BenchBaselineSpec).
     */
   private[graft] def compactLine(entries: Seq[(String, Double)],
       total: Double, failed: Seq[String], sfDir: String): String = {
-    val qsMs = entries.sortBy(_._2).map { case (k, v) =>
-      s""""$k":${math.round(v * 1000)}""" }.mkString("{", ",", "}")
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries_unit":"ms","sf":"$sfDir","n":${entries.size},"failed":$failedJson,"queries":$qsMs}"""
+    def render(failedShown: Seq[String], shown: Seq[(String, Double)]): String = {
+      val qsMs = shown.sortBy(_._2).map { case (k, v) =>
+        s""""$k":${math.round(v * 1000)}""" }.mkString("{", ",", "}")
+      val failedJson = failedShown.map("\"" + _ + "\"").mkString("[", ",", "]")
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries_unit":"ms","sf":"$sfDir","n":${entries.size},"n_failed":${failed.size},"failed":$failedJson,"omitted":${entries.size - shown.size},"queries":$qsMs}"""
+    }
+    def fits(line: String): Boolean =
+      line.getBytes(java.nio.charset.StandardCharsets.UTF_8).length <= CompactLineMaxBytes
+    val failedShown = failed.inits.find(f => fits(render(f, Nil))).getOrElse(Nil)
+    val slowest = entries.sortBy(-_._2)
+    val k = (1 to slowest.size).takeWhile(k =>
+      fits(render(failedShown, slowest.take(k)))).lastOption.getOrElse(0)
+    render(failedShown, slowest.take(k))
   }
+
+  /** The byte bound of [[compactLine]], inside a ~2,000-char stdout tail. */
+  private[graft] val CompactLineMaxBytes = 1900
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -411,7 +418,7 @@ object Bench {
       graft.core.Engine.scratchLocalDir()
         .fold(b)(d => b.config("spark.local.dir", d)
           .config("spark.sql.warehouse.dir",
-            graft.core.Engine.scratchTempDir("graft-bench-wh-").toString))
+            graft.core.Engine.scratchTempDir("graft-bench-wh-", Some(d)).toString))
         .getOrCreate()
     }
     spark.sparkContext.setLogLevel("WARN")

@@ -76,37 +76,39 @@ object Scale {
     * task count, median/max duration, max/median ratio, and the stage's
     * max shuffle-read task bytes so a duration outlier can be attributed
     * to data volume vs a sick executor. Same single-tenant caveat as the
-    * other diagnostic listeners.
+    * other diagnostic listeners. Tasks are kept per stage ATTEMPT: a
+    * retried stage reports each attempt on its own, never mixing the
+    * attempts' tasks. Lines go to `report`.
     */
-  private final class StageSkewReporter(sc: org.apache.spark.SparkContext) {
+  private[graft] final class StageSkewReporter(
+      report: String => Unit = System.err.println(_))
+      extends org.apache.spark.scheduler.SparkListener {
     private val durs = new java.util.concurrent.ConcurrentHashMap[
-      Int, java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]]()
-    private val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = e.taskMetrics
-        if (e.taskInfo != null && m != null)
-          durs.computeIfAbsent(e.stageId,
-            _ => new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]())
-            .add((e.taskInfo.duration, m.shuffleReadMetrics.totalBytesRead))
-      }
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val q = durs.remove(e.stageInfo.stageId)
-        if (q != null && q.size >= 8) {
-          import scala.jdk.CollectionConverters._
-          val ds = q.asScala.map(_._1).toArray.sorted
-          val med = math.max(ds(ds.length / 2), 1L)
-          val maxSr = q.asScala.map(_._2).max
-          System.err.println(f"[stage-skew] stage=${e.stageInfo.stageId}%-5d " +
-            f"tasks=${ds.length}%-4d med=${med / 1000.0}%6.2fs " +
-            f"max=${ds.last / 1000.0}%6.2fs ratio=${ds.last.toDouble / med}%5.2f " +
-            f"maxShufR=${maxSr / 1048576.0}%8.1fMB  " +
-            e.stageInfo.name.takeWhile(_ != '\n').take(60))
-        }
+      (Int, Int), java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]]()
+    override def onTaskEnd(
+        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+      val m = e.taskMetrics
+      if (e.taskInfo != null && m != null)
+        durs.computeIfAbsent((e.stageId, e.stageAttemptId),
+          _ => new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]())
+          .add((e.taskInfo.duration, m.shuffleReadMetrics.totalBytesRead))
+    }
+    override def onStageCompleted(
+        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
+      val s = e.stageInfo
+      val q = durs.remove((s.stageId, s.attemptNumber()))
+      if (q != null && q.size >= 8) {
+        import scala.jdk.CollectionConverters._
+        val ds = q.asScala.map(_._1).toArray.sorted
+        val med = math.max(ds(ds.length / 2), 1L)
+        val maxSr = q.asScala.map(_._2).max
+        report(f"[stage-skew] stage=${s.stageId}%-5d attempt=${s.attemptNumber()}%-2d " +
+          f"tasks=${ds.length}%-4d med=${med / 1000.0}%6.2fs " +
+          f"max=${ds.last / 1000.0}%6.2fs ratio=${ds.last.toDouble / med}%5.2f " +
+          f"maxShufR=${maxSr / 1048576.0}%8.1fMB  " +
+          s.name.takeWhile(_ != '\n').take(60))
       }
     }
-    sc.addSparkListener(listener)
   }
 
   /** (count, Σ xxhash64(row)) over a projection — the multiset witness.
@@ -161,7 +163,7 @@ object Scale {
     spark.sparkContext.setLogLevel("WARN")
     graft.core.Engine.perfDefaults(spark)
     if (sys.env.get("SPARK_GRAFT_STAGE_SKEW").contains("1"))
-      new StageSkewReporter(spark.sparkContext)
+      spark.sparkContext.addSparkListener(new StageSkewReporter())
     import spark.implicits._
 
     // ------------------------------------------------------------ staging

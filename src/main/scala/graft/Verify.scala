@@ -23,7 +23,7 @@ object Verify {
       graft.core.Engine.scratchLocalDir()
         .fold(b)(d => b.config("spark.local.dir", d)
           .config("spark.sql.warehouse.dir",
-            graft.core.Engine.scratchTempDir("graft-verify-wh-").toString))
+            graft.core.Engine.scratchTempDir("graft-verify-wh-", Some(d)).toString))
         .getOrCreate()
     }
     spark.sparkContext.setLogLevel("WARN")

@@ -31,7 +31,8 @@ object Engine {
     // scratch into RAM — the /dev/shm auto-fallback is for the dev/driver
     // entry points Bench/Verify/Scale/PlanDump, which pass autoFallback
     // through their own scratchLocalDir() calls; SPARK_GRAFT_LOCAL_DIR=auto
-    // opts a library session in).
+    // opts a library session in). Per-gate scratch databases follow the
+    // same choice (scratchTempDir).
     scratchLocalDir(autoFallback = false).fold(b)(d => b.config("spark.local.dir", d))
   }
 
@@ -160,10 +161,22 @@ object Engine {
     }
   }
 
-  /** A fresh ephemeral temp directory, preferring [[scratchLocalDir]] over
-    * java.io.tmpdir — for run-scoped artifacts with tempdir semantics
-    * (per-gate scratch databases, scratch warehouses): same lifecycle as
-    * before, just on the fast device when one exists.
+  /** A session's first `spark.local.dir`: the scratch device it chose
+    * when it was built — [[builder]] only on an explicit
+    * `SPARK_GRAFT_LOCAL_DIR`, the Bench/Verify/Scale/PlanDump entry points
+    * through [[scratchLocalDir]]'s auto-fallback. None leaves Spark's
+    * default.
+    */
+  def sessionLocalDir(spark: SparkSession): Option[String] =
+    spark.sparkContext.getConf.getOption("spark.local.dir")
+      .map(_.split(",").head.trim).filter(_.nonEmpty)
+
+  /** A fresh ephemeral temp directory under `under` (java.io.tmpdir when
+    * None) — for run-scoped artifacts with tempdir semantics (per-gate
+    * scratch databases, scratch warehouses). `under` defaults to the active
+    * session's [[sessionLocalDir]], so scratch data follows the session's
+    * own choice: a library session puts it on /dev/shm only with
+    * `SPARK_GRAFT_LOCAL_DIR=auto`.
     *
     * Every directory handed out here is swept by a JVM shutdown hook
     * (r17 advice item 3: per-gate scratch databases and per-run
@@ -174,10 +187,12 @@ object Engine {
     * already reclaimed, or a directory another process holds open,
     * never blocks JVM exit or the other entries' deletion.
     */
-  def scratchTempDir(prefix: String): java.nio.file.Path = {
-    val dir = scratchLocalDir() match {
+  def scratchTempDir(prefix: String, under: Option[String] =
+      SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+        .flatMap(sessionLocalDir)): java.nio.file.Path = {
+    val dir = under match {
       case Some(d) => java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(d), prefix)
+        java.nio.file.Files.createDirectories(java.nio.file.Paths.get(d)), prefix)
       case None => java.nio.file.Files.createTempDirectory(prefix)
     }
     scratchDirs.add(dir)

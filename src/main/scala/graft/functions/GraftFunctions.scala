@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -375,6 +375,26 @@ object TextCounts {
   }
 }
 
+/** gopher_counts(text) → array<int>: every count the Gopher rules ratio
+  * ([[Kernels.gopherCounts]], layout there). Two calls over the same text
+  * are the same expression, so a projection runs the scan once per row
+  * however many rule signals read it.
+  */
+case class GopherCounts(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
+  override def prettyName: String = "graft_gopher_counts"
+  @transient private lazy val seen = ThreadLocal.withInitial(() => new LineSet)
+  override protected def nullSafeEval(t: Any): Any =
+    Kernels.gopherCounts(t.asInstanceOf[UTF8String], seen.get())
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val seenRef = ctx.addMutableState("graft.functions.LineSet", "gopherLines",
+      v => s"$v = new graft.functions.LineSet();")
+    defineCodeGen(ctx, ev, t => s"graft.functions.Kernels.gopherCounts($t, $seenRef)")
+  }
+  override protected def withNewChildInternal(c: Expression): Expression =
+    copy(child = c)
+}
+
 /** bpe_tokens(text, merges) → array<string>: apply a trained BPE merge
   * table ([[Kernels.bpeTokens]]). `merges` is a foldable array<string> of
   * "left right" keys in rank order — a plan-time constant like the
@@ -550,17 +570,29 @@ object GraftFunctions {
     * derived array derive it N times per row (stopword counts taken this
     * way split every `txt_langid` document six times). A per-row count that
     * several scorers share belongs in one custom expression that
-    * elimination can see whole ([[TextCounts]]). A FILTER gets no
-    * elimination at all: pushed through a projection it inlines each
-    * reference again, which is why a filter on several [[TextCounts]]
-    * scorers reads them from a column bound by a generator
-    * ([[graft.text.TextAnalysis.withCounts]]).
+    * elimination can see whole ([[TextCounts]], [[GopherCounts]]). A
+    * FILTER gets no elimination at all: pushed through a projection it
+    * inlines each reference again, which is why a filter on several
+    * scores over such a count reads them from a column bound by
+    * [[bindRow]].
     */
   def bindArray(e: Column)(body: Column => Column): Column =
     org.apache.spark.sql.functions.element_at(
       org.apache.spark.sql.functions.transform(
         org.apache.spark.sql.functions.array(e), body),
       1)
+
+  /** `df` plus column `name` holding `value`, made by a one-row generator
+    * (`explode` of a one-element array). For frames that FILTER on several
+    * expressions over one costly value: a filter gets no subexpression
+    * elimination, and pushed through a projection it inlines every
+    * reference to the value; it cannot be pushed below a generator whose
+    * output it reads, so each reference is a read of the one bound value.
+    */
+  def bindRow(df: DataFrame, value: Column, name: String): DataFrame =
+    df.select(org.apache.spark.sql.functions.col("*"),
+      org.apache.spark.sql.functions.explode(
+        org.apache.spark.sql.functions.array(value)).as(name))
 
   /** Register the functions in a session's registry so both `spark.sql` and
     * `call_function` can use them. Idempotent per session.
@@ -620,6 +652,8 @@ object GraftFunctions {
       es => Sq8Dot(es(0), es(1)), "built-in")
     reg.createOrReplaceTempFunction("graft_text_counts",
       es => TextCounts.fromLiteral(es(0), es(1)), "built-in")
+    reg.createOrReplaceTempFunction("graft_gopher_counts",
+      es => GopherCounts(es.head), "built-in")
   }
 
   def cosineSim(a: Column, b: Column): Column = call_function("graft_cosine", a, b)
@@ -669,6 +703,9 @@ object GraftFunctions {
   def textCounts(text: Column, lists: Seq[Seq[String]]): Column =
     call_function("graft_text_counts", text,
       org.apache.spark.sql.functions.typedlit(lists))
+
+  /** Per-document counts behind the Gopher rules ([[GopherCounts]]). */
+  def gopherCounts(text: Column): Column = call_function("graft_gopher_counts", text)
 
   /** Int8 scalar quantization ([[Sq8Encode]]) / quantized cosine
     * ([[Sq8Dot]]). */

@@ -60,9 +60,71 @@ final class WordLists(lists: Seq[Seq[String]]) extends Serializable {
 
 object WordLists {
   private def hash(bytes: Array[Byte]): Int = bytes.foldLeft(0)((h, b) => 31 * h + b)
-  private def slot(h: Int, mask: Int): Int = {
+  private[functions] def slot(h: Int, mask: Int): Int = {
     val x = h * 0x9e3779b9
     (x ^ (x >>> 16)) & mask
+  }
+}
+
+/** Per-task scratch for [[Kernels.gopherCounts]]: the set of one
+  * document's distinct lines, each held as (offset, length, hash) into the
+  * document's bytes, in an open-addressing table. [[reset]] empties it by
+  * bumping a generation stamp, so once the table has grown to the task's
+  * longest document a row allocates nothing. One instance per task: not
+  * thread-safe.
+  */
+final class LineSet {
+  private var offs = new Array[Int](64)
+  private var lens = new Array[Int](64)
+  private var hashes = new Array[Int](64)
+  private var gens = new Array[Int](64) // a slot is in use iff gens(slot) == gen
+  private var gen = 0
+  private var size = 0
+
+  def reset(): Unit = {
+    if (gen == Int.MaxValue) {
+      java.util.Arrays.fill(gens, 0)
+      gen = 0
+    }
+    gen += 1
+    size = 0
+  }
+
+  /** Add the `len` bytes at `base`/`baseOff` + `off`, whose hash is `h`.
+    * False when an equal line is already in the set.
+    */
+  def add(base: AnyRef, baseOff: Long, off: Int, len: Int, h: Int): Boolean = {
+    if (2 * (size + 1) > gens.length) grow()
+    val mask = gens.length - 1
+    var slot = WordLists.slot(h, mask)
+    while (gens(slot) == gen) {
+      if (hashes(slot) == h && lens(slot) == len &&
+          org.apache.spark.unsafe.array.ByteArrayMethods.arrayEquals(
+            base, baseOff + offs(slot), base, baseOff + off, len))
+        return false
+      slot = (slot + 1) & mask
+    }
+    put(slot, off, len, h)
+    size += 1
+    true
+  }
+
+  private def put(slot: Int, off: Int, len: Int, h: Int): Unit = {
+    gens(slot) = gen; offs(slot) = off; lens(slot) = len; hashes(slot) = h
+  }
+
+  private def grow(): Unit = {
+    val (o, l, h, g) = (offs, lens, hashes, gens)
+    offs = new Array[Int](2 * o.length)
+    lens = new Array[Int](2 * o.length)
+    hashes = new Array[Int](2 * o.length)
+    gens = new Array[Int](2 * o.length)
+    val mask = gens.length - 1
+    for (i <- g.indices if g(i) == gen) {
+      var slot = WordLists.slot(h(i), mask)
+      while (gens(slot) == gen) slot = (slot + 1) & mask
+      put(slot, o(i), l(i), h(i))
+    }
   }
 }
 
@@ -153,6 +215,186 @@ object Kernels {
     out(2) = punct
     UnsafeArrayData.fromPrimitiveArray(out)
   }
+
+  /** The Gopher rules' required stopwords, in the order of their bits in
+    * [[gopherCounts]]. Lowercase ASCII letters, no `k` (see there).
+    */
+  val gopherStopwords: Seq[String] =
+    Seq("the", "be", "to", "of", "and", "that", "have", "with")
+  // Each stopword's bytes packed big-endian into a Long, as the kernel
+  // packs a token's case-folded bytes; equal packs and lengths are equal
+  // words.
+  private val stopPacked: Array[Long] =
+    gopherStopwords.map(_.foldLeft(0L)((p, c) => (p << 8) | c)).toArray
+  private val stopLens: Array[Int] = gopherStopwords.map(_.length).toArray
+  private val maxStopLen = stopLens.max
+
+  /** Per-document counts behind the [[graft.text.QualityRules]] signals,
+    * in one pass over the UTF-8 bytes (no String, no regex, no token or
+    * line array). Words are the tokens of `split(trim(s), "\\s+")` (the
+    * [[textCounts]] contract); lines are those of `split(s, "\n")`, which
+    * with limit −1 makes k newlines k + 1 lines. Layout:
+    *   - 0: words; 1: code points inside words;
+    *   - 2: `#` occurrences; 3: non-overlapping `...` occurrences (a run of
+    *     k dots holds k / 3);
+    *   - 4: lines; 5: bullet lines, whose first code point after leading
+    *     spaces is `-`, `*` or `•`; 6: ellipsis lines, ending in `...` or
+    *     `…` once trailing spaces are stripped, or just before one final
+    *     `\r`, U+0085, U+2028 or U+2029 (where the reference's Java regex
+    *     `$` also matches);
+    *   - 7: words containing an ASCII letter;
+    *   - 8: how many of [[gopherStopwords]] occur as a lowercased word;
+    *   - 9: non-blank lines (a byte other than U+0020: `trim` strips
+    *     spaces only); 10: distinct non-blank lines; 11: code points of
+    *     the non-blank lines equal to an earlier line; 12: code points of
+    *     the non-blank lines.
+    * Lowercasing folds ASCII only: the only code points at or above U+0080
+    * whose `lower` holds an ASCII letter are U+0130 (to `i` U+0307, never
+    * a whole ASCII word) and U+212A (to `k`, in no stopword), so a word
+    * with a non-ASCII byte is never a stopword (pinned in GopherCountsSpec).
+    * Code points are UTF-8 lead bytes, which is `length` on valid UTF-8.
+    * `seen` is the caller's per-task scratch.
+    */
+  def gopherCounts(s: UTF8String, seen: LineSet): ArrayData = {
+    val base = s.getBaseObject
+    val off = s.getBaseOffset
+    val n = s.numBytes
+    var lo = 0
+    while (lo < n && Platform.getByte(base, off + lo) == ' ') lo += 1
+    var hi = n
+    while (hi > lo && Platform.getByte(base, off + hi - 1) == ' ') hi -= 1
+    var words, wordChars, alphaWords, stopMask = 0
+    var inWs = false
+    var tokLen = 0
+    var tokAlpha = false
+    var tokAscii = true
+    var tokPacked = 0L
+    var hashes, ellipses, dots = 0
+    var lines, bullets, ellipsisLines, nonBlank, distinct, dupChars, nbChars = 0
+    var lineStart = 0
+    var lineHash = 0
+    var lineChars = 0
+    var blank = true
+    seen.reset()
+    var i = 0
+    // i == n closes the last line as a newline would.
+    while (i <= n) {
+      val b = if (i < n) Platform.getByte(base, off + i) else '\n'.toByte
+      val lead = (b & 0xc0) != 0x80
+      if (b == '\n') {
+        lines += 1
+        if (isBullet(base, off, lineStart, i)) bullets += 1
+        if (endsInEllipsis(base, off, lineStart, i)) ellipsisLines += 1
+        if (!blank) {
+          nonBlank += 1
+          nbChars += lineChars
+          if (seen.add(base, off, lineStart, i - lineStart, lineHash)) distinct += 1
+          else dupChars += lineChars
+        }
+        lineStart = i + 1
+        lineHash = 0
+        lineChars = 0
+        blank = true
+      } else {
+        lineHash = 31 * lineHash + b
+        if (lead) lineChars += 1
+        if (b != ' ') blank = false
+      }
+      if (b == '#') hashes += 1
+      if (b == '.') {
+        dots += 1
+        if (dots == 3) { ellipses += 1; dots = 0 }
+      } else dots = 0
+      if (i >= lo && i < hi) {
+        if (b == ' ' || (b >= '\t' && b <= '\r')) { // the `\s` of the split
+          if (!inWs) {
+            words += 1
+            if (tokAlpha) alphaWords += 1
+            if (tokAscii && tokLen <= maxStopLen) stopMask |= stopBit(tokPacked, tokLen)
+            inWs = true
+          }
+        } else {
+          if (inWs) {
+            tokLen = 0; tokAlpha = false; tokAscii = true; tokPacked = 0L
+            inWs = false
+          }
+          if (lead) wordChars += 1
+          tokLen += 1
+          if (b < 0) tokAscii = false
+          else {
+            val c = if (b >= 'A' && b <= 'Z') b + 32 else b.toInt
+            if (c >= 'a' && c <= 'z') tokAlpha = true
+            tokPacked = (tokPacked << 8) | c
+          }
+        }
+      }
+      i += 1
+    }
+    // The last word: empty when the trimmed text ends in a whitespace run.
+    words += 1
+    if (!inWs) {
+      if (tokAlpha) alphaWords += 1
+      if (tokAscii && tokLen <= maxStopLen) stopMask |= stopBit(tokPacked, tokLen)
+    }
+    UnsafeArrayData.fromPrimitiveArray(Array(words, wordChars, hashes,
+      ellipses, lines, bullets, ellipsisLines, alphaWords,
+      Integer.bitCount(stopMask), nonBlank, distinct, dupChars, nbChars))
+  }
+
+  private def stopBit(packed: Long, len: Int): Int = {
+    var k = 0
+    while (k < stopPacked.length) {
+      if (stopLens(k) == len && stopPacked(k) == packed) return 1 << k
+      k += 1
+    }
+    0
+  }
+
+  // UTF-8 of `•` U+2022 and `…` U+2026.
+  private final val E2 = 0xe2.toByte
+  private final val X80 = 0x80.toByte
+
+  /** `ltrim(line).rlike("^[-*•]")` over bytes [`from`, `to`). */
+  private def isBullet(base: AnyRef, off: Long, from: Int, to: Int): Boolean = {
+    var p = from
+    while (p < to && Platform.getByte(base, off + p) == ' ') p += 1
+    p < to && {
+      val b = Platform.getByte(base, off + p)
+      b == '-' || b == '*' || (b == E2 && p + 3 <= to &&
+        Platform.getByte(base, off + p + 1) == X80 &&
+        Platform.getByte(base, off + p + 2) == 0xa2.toByte)
+    }
+  }
+
+  /** `rtrim(line).rlike("(\\.\\.\\.|…)$")` over bytes [`from`, `to`):
+    * Java's `$` matches at the end and before one final line terminator.
+    */
+  private def endsInEllipsis(base: AnyRef, off: Long, from: Int, to: Int): Boolean = {
+    var q = to
+    while (q > from && Platform.getByte(base, off + q - 1) == ' ') q -= 1
+    val t = terminatorLen(base, off, from, q)
+    endsWithEllipsis(base, off, from, q) ||
+      (t > 0 && endsWithEllipsis(base, off, from, q - t))
+  }
+
+  /** Byte length of the line terminator `\r`, U+0085, U+2028 or U+2029
+    * ending bytes [`from`, `to`), or 0.
+    */
+  private def terminatorLen(base: AnyRef, off: Long, from: Int, to: Int): Int = {
+    def at(k: Int): Byte = Platform.getByte(base, off + to - k)
+    if (to - from >= 1 && at(1) == '\r') 1
+    else if (to - from >= 2 && at(2) == 0xc2.toByte && at(1) == 0x85.toByte) 2
+    else if (to - from >= 3 && at(3) == E2 && at(2) == X80 &&
+        (at(1) == 0xa8.toByte || at(1) == 0xa9.toByte)) 3
+    else 0
+  }
+
+  private def endsWithEllipsis(base: AnyRef, off: Long, from: Int, to: Int): Boolean =
+    to - from >= 3 && {
+      val (a, b, c) = (Platform.getByte(base, off + to - 3),
+        Platform.getByte(base, off + to - 2), Platform.getByte(base, off + to - 1))
+      (a == '.' && b == '.' && c == '.') || (a == E2 && b == X80 && c == 0xa6.toByte)
+    }
 
   /** SimHash-64 of a token array: per-token 64-bit hashes vote on each bit;
     * the sign of each bit's tally forms the signature. Near-identical token

@@ -27,10 +27,11 @@ object MaterializationQueries {
   private[queries] def scratchDb(spark: SparkSession): String = {
     val name = "graft_scratch_" + UUID.randomUUID.toString.replace("-", "").take(12)
     // Ephemeral per-gate database — Engine.scratchTempDir puts it on the
-    // fast scratch device when one exists (r17: the sandbox's virtio disk
+    // session's scratch device (r17: the sandbox's virtio disk
     // intermittently throttles to single-digit MB/s and every
     // materialization gate rewrites its tables through this directory).
-    val loc = graft.core.Engine.scratchTempDir(name).toString
+    val loc = graft.core.Engine.scratchTempDir(name,
+      graft.core.Engine.sessionLocalDir(spark)).toString
     spark.sql(s"CREATE DATABASE $name LOCATION '$loc'")
     name
   }
@@ -1691,7 +1692,8 @@ object MaterializationQueries {
 
     // S12 — precedence facts, plus the default-path shape.
     val wh = spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/")
-    val custom = Engine.scratchTempDir("graft_exec_loc").toString
+    val custom = Engine.scratchTempDir("graft_exec_loc",
+      Engine.sessionLocalDir(spark)).toString
     val s12 =
       Locations.resolve(spark, rel, Some("/data/root"), Some(custom)) == custom &&
       Locations.resolve(spark, rel, Some("/data/root/"), None) ==

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core.{ScopedStorage, Tables}
 import graft.core.ScopedStorage.Ops
@@ -445,31 +446,35 @@ object PipelineQueries {
 
   /** The stateless quality filter as a STREAM gate: the lined corpus
     * streamed through the Gopher keep-rules inside the streaming planner
-    * (scan-local codegen'd conjuncts apply to a stream unchanged — the
+    * (the scan-local rule kernel applies to a stream unchanged — the
     * filter-at-ingest deployment), surviving doc_ids pinned against the
     * batch rule replay. Stateless ⇒ batching-independent by construction;
     * the gate makes that a hash-checked contract instead of a spec claim.
+    * `probe` sees the query after the drain
+    * ([[graft.streaming.EventStreams.runBoundedToMemory]]).
     */
-  def streamQualityFilter(spark: SparkSession, dir: String): DataFrame =
+  def streamQualityFilter(spark: SparkSession, dir: String,
+      probe: StreamingQuery => Unit = _ => ()): DataFrame = {
+    GraftFunctions.register(spark)
     graft.materialize.Staging.withDir(spark, "stream_gq") { d =>
       val docs = linedDocs(Tables.documents(spark, dir))
         .select(col("doc_id"), col("text"))
       docs.write.parquet(s"$d/src")
       val schema = spark.read.parquet(s"$d/src").schema
-      val transform: DataFrame => DataFrame = df => df.filter(
-        QualityRules.gopherQualityKeep(col("text")) &&
-          QualityRules.gopherRepetitionKeep(col("text")))
+      val transform: DataFrame => DataFrame =
+        df => QualityRules.survivors(df, col("text"))
       val sink = "stream_gq_" +
         java.util.UUID.randomUUID.toString.replace("-", "").take(10)
       val res = graft.streaming.EventStreams.runBoundedToMemory(
         spark, s"$d/src", schema, transform, sink,
-        statePartitions = Some(8), noDataBatch = false)
+        statePartitions = Some(8), noDataBatch = false, probe = probe)
         .select(col("doc_id"))
         .orderBy(col("doc_id"))
         .cache()
       res.count() // materialize before the staging dir vanishes
       res
     }
+  }
 
   private def streamQualityFilterSql: String =
     s"""WITH $linedDocsSql,
@@ -2930,10 +2935,11 @@ object PipelineQueries {
       TextAnalysis.chunkTokens(col("text"), maxTokens = 12, overlap = 0), "\n")
     // Scoped-PERSISTED: the lined text is a DERIVED column (regex tokenize
     // + chunk + array_join), and downstream consumers reference `text`
-    // many times — the Gopher rule conjuncts alone ~25×. Left as a bare
+    // more than once (the Gopher rules through one kernel call, the C4
+    // and line-dedup rules through their own line splits). Left as a bare
     // projection, predicate pushdown inlines the whole derivation into
-    // every reference (the r08 `pipe_clean_pack` cliff: 25 re-tokenizations
-    // per row under a filter). Persisting makes the frame an
+    // every reference under a filter (the r08 `pipe_clean_pack` cliff).
+    // Persisting makes the frame an
     // InMemoryRelation leaf at planning time, so every reference is an
     // attribute read of the ONE materialized string — the plan-shape
     // equivalent of a pipeline stage boundary, which is exactly what a
@@ -2970,7 +2976,8 @@ object PipelineQueries {
     * doc; the synthetic-corpus extremes (bullet walls, ellipsis chains)
     * are pinned by the ScalaTest spec instead.
     */
-  def txtGopher(spark: SparkSession, dir: String): DataFrame =
+  def txtGopher(spark: SparkSession, dir: String): DataFrame = {
+    GraftFunctions.register(spark)
     QualityRules.withRuleColumns(linedDocs(Tables.documents(spark, dir)), "text")
       .select(col("doc_id"), col("n_words"),
         round(col("mean_word_len"), 6).as("mean_word_len"),
@@ -2984,6 +2991,7 @@ object PipelineQueries {
         col("quality_keep").cast("int").as("quality_keep"),
         col("repetition_keep").cast("int").as("repetition_keep"))
       .orderBy(col("doc_id"))
+  }
 
   /** DuckDB CTE fragment computing every Gopher rule column + both keep
     * verdicts over a CTE `from` with (doc_id, text); yields `__gk`.
@@ -3383,11 +3391,8 @@ object PipelineQueries {
     */
   def pipeFilterChain(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val lined = linedDocs(Tables.documents(spark, dir))
-    val kept = lined.filter(
-        QualityRules.gopherQualityKeep(col("text")) &&
-          QualityRules.gopherRepetitionKeep(col("text")))
-      .scopedCheckpoint(false)
+    val kept = QualityRules.survivors(linedDocs(Tables.documents(spark, dir)),
+      col("text")).scopedCheckpoint(false)
     val cleaned = LineDedup.removeDuplicateLines(kept, "doc_id", "text")
       .scopedCheckpoint(false)
     val scored = graft.text.UnigramLm.scoreDocs(cleaned, "doc_id",
@@ -3739,9 +3744,10 @@ object PipelineQueries {
     */
   def pipeCleanPack(spark: SparkSession, dir: String): DataFrame = {
     GraftFunctions.register(spark)
-    val kept = linedDocs(Tables.documents(spark, dir))
-      .filter(QualityRules.gopherQualityKeep(col("text")) &&
-        QualityRules.gopherRepetitionKeep(col("text")))
+    // Checkpointed once: the packing reads its input twice (the layout and
+    // its join-back), and each read would evaluate the rules again.
+    val kept = QualityRules.survivors(linedDocs(Tables.documents(spark, dir)),
+      col("text")).select(col("doc_id"), col("n_chars")).scopedCheckpoint(false)
     Packing.packSequences(kept, "doc_id", "n_chars",
       seqLen = 4096L, nShards = 4, salt = 29L)
       .groupBy(col("shard"))
@@ -4318,7 +4324,7 @@ object PipelineQueries {
     "pipe_corpus_diff" -> (pipeCorpusDiff _),
     "txt_heavy_hitters" -> (txtHeavyHitters _),
     "txt_heavy_bigrams" -> (txtHeavyBigrams _),
-    "stream_quality_filter" -> (streamQualityFilter _),
+    "stream_quality_filter" -> ((s, d) => streamQualityFilter(s, d)),
     "pipe_curriculum" -> (pipeCurriculum _),
     "pipe_hard_negatives" -> (pipeHardNegatives _),
     "pipe_epoch_plan" -> (pipeEpochPlan _),

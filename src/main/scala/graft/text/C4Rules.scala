@@ -37,8 +37,8 @@ import org.apache.spark.sql.functions._
 object C4Rules {
 
   /** Words on a line, whitespace convention shared with
-    * [[QualityRules.wordCount]] (empty line counts 1 empty token — it is
-    * dropped by the ≥ 5 rule either way).
+    * [[QualityRules.Signals.wordCount]] (empty line counts 1 empty token —
+    * it is dropped by the ≥ 5 rule either way).
     */
   val minWordsPerLine: Int = 5
 

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.GraftFunctions
+
 /** The published rule-based quality filter family for web-scale pretraining
   * corpora (the Gopher rules of Rae et al. 2021 §A1.1, carried forward by
   * MassiveText / RefinedWeb / Dolma): cheap structural signals — word
@@ -12,14 +14,20 @@ import org.apache.spark.sql.functions._
   * mass). Documents failing any rule are boilerplate, navigation chrome,
   * machine-generated lists, or lorem-grade noise.
   *
-  * Scale shape: every signal is a scan-local codegen'd expression over the
-  * row's own text — no shuffle, no UDF, no state. At 100 TB this whole
-  * filter is a map stage fused into the parquet scan, exactly like the
-  * [[TextAnalysis]] scorers. The duplicate-line character mass uses a
-  * sort-adjacency sweep (O(L log L) per doc in its own line count, never
-  * the O(L²) contains-scan), and every arithmetic path is integer counts
-  * ratioed in double so external engines (the DuckDB oracle) reproduce the
-  * decisions bit-for-bit.
+  * Scale shape: every signal and both verdicts are plain Column arithmetic
+  * over ONE codegen'd kernel call per row ([[graft.functions.GopherCounts]]),
+  * a single pass over the text's bytes that counts words, lines, symbols and
+  * duplicate lines without building a token or line array — no shuffle, no
+  * state, a map stage fused into the parquet scan. The integer counts are
+  * ratioed in double, so the DuckDB oracle reproduces every decision
+  * bit-for-bit.
+  *
+  * Cost: a projection reading several signals of the same text runs the
+  * kernel once (subexpression elimination sees the one call). A FILTER
+  * does not get that elimination, so filter with [[survivors]], or bind
+  * the counts with [[withSignals]] and read them as `Signals(col(name))`.
+  * The kernel resolves through the session registry: call
+  * [[graft.functions.GraftFunctions.register]] before building a frame.
   *
   * Reference scope: the reference engine (aws-samples/dbt-glue) delegates
   * row-level quality tests to user SQL (dbt tests — see
@@ -29,161 +37,141 @@ import org.apache.spark.sql.functions._
   */
 object QualityRules {
 
-  private def toks(text: Column): Column = split(trim(text), "\\s+")
-  private def lines(text: Column): Column = split(text, "\n")
-
-  /** Whitespace word count (empty text counts 1 empty token — the split
-    * contract shared with [[TextAnalysis.tokens]] and the oracle).
-    */
-  def wordCount(text: Column): Column = size(toks(text))
-
-  /** Mean characters per word. */
-  def meanWordLength(text: Column): Column =
-    aggregate(toks(text), lit(0L), (acc, t) => acc + length(t))
-      .cast("double") / wordCount(text)
-
-  /** (`#` occurrences + non-overlapping `...` occurrences) / words — the
-    * Gopher symbol-to-word ratio; markup soup and truncation chains score
-    * high.
-    */
-  def symbolToWordRatio(text: Column): Column =
-    (regexp_count(text, lit("#")) + regexp_count(text, lit("\\.\\.\\.")))
-      .cast("double") / wordCount(text)
-
-  /** Fraction of lines starting with a bullet glyph (`-`, `*`, `•`) after
-    * leading-space strip.
-    */
-  def bulletLineFrac(text: Column): Column = {
-    val l = lines(text)
-    size(filter(l, x => ltrim(x).rlike("^[-*•]"))).cast("double") / size(l)
-  }
-
-  /** Fraction of lines ending with an ellipsis (`...` or `…`) after
-    * trailing-space strip.
-    */
-  def ellipsisLineFrac(text: Column): Column = {
-    val l = lines(text)
-    size(filter(l, x => rtrim(x).rlike("(\\.\\.\\.|…)$"))).cast("double") /
-      size(l)
-  }
-
-  /** Fraction of words containing at least one ASCII letter. */
-  def alphaWordFrac(text: Column): Column =
-    size(filter(toks(text), t => t.rlike("[a-zA-Z]"))).cast("double") /
-      wordCount(text)
-
   /** Gopher's required-stopword list: a natural-language English document
-    * contains at least [[minRequiredStopwords]] of these as whole tokens.
+    * contains at least [[minRequiredStopwords]] of these as whole
+    * (lowercased) whitespace tokens.
     */
-  val requiredStopwords: Seq[String] =
-    Seq("the", "be", "to", "of", "and", "that", "have", "with")
+  val requiredStopwords: Seq[String] = graft.functions.Kernels.gopherStopwords
   val minRequiredStopwords: Int = 2
 
-  /** How many of [[requiredStopwords]] appear as a (lowercased) token.
-    * The lowered token array is bound as a lambda variable so the 8
-    * membership probes read one bound buffer instead of re-tokenizing per
-    * probe (the pitfall documented at GraftFunctions.bindArray).
+  /** The rule signals and verdicts of one row's
+    * [[graft.functions.GopherCounts]]: `value` is either the kernel call on
+    * a text ([[signals]]) or a column already holding it ([[withSignals]]).
+    * Words are the tokens of `split(trim(text), "\\s+")` (empty text is one
+    * empty word — the contract shared with [[TextAnalysis.tokens]] and the
+    * oracle); lines are those of `split(text, "\n")`.
     */
-  def requiredStopwordHits(text: Column): Column =
-    graft.functions.GraftFunctions
-      .bindArray(transform(toks(text), t => lower(t))) { lowered =>
-        requiredStopwords
-          .map(w => when(array_contains(lowered, w), 1).otherwise(0))
-          .reduce(_ + _)
-      }
+  final case class Signals(value: Column) {
+    private def count(i: Int): Column = value.getItem(i)
+    private def ratio(num: Column, den: Column): Column = num.cast("double") / den
+    private def words: Column = count(0)
+    private def lines: Column = count(4)
+    private def nonBlankLines: Column = count(9)
 
-  private def nonBlankLines(text: Column): Column =
-    filter(lines(text), l => trim(l) =!= "")
+    /** Whitespace word count. */
+    def wordCount: Column = words
 
-  /** Fraction of NON-BLANK lines that are duplicates of another line in
-    * the doc, excess-occurrence convention: the first occurrence is the
-    * original, every later occurrence is a duplicate — (n − distinct) / n.
-    * Blank-after-trim lines are structural paragraph separators, exempt
-    * from both sides of the ratio (the [[LineDedup]] contract) — a
-    * well-formed multi-paragraph doc repeats its blank separator many
-    * times without being repetitious. Docs with no non-blank lines
-    * score 0.
-    */
-  def dupLineFrac(text: Column): Column = {
-    val nb = nonBlankLines(text)
-    when(size(nb) === 0, lit(0.0)).otherwise(
-      (size(nb) - size(array_distinct(nb))).cast("double") / size(nb))
+    /** Mean characters per word. */
+    def meanWordLength: Column = ratio(count(1), words)
+
+    /** (`#` occurrences + non-overlapping `...` occurrences) / words — the
+      * Gopher symbol-to-word ratio; markup soup and truncation chains score
+      * high.
+      */
+    def symbolToWordRatio: Column = ratio(count(2) + count(3), words)
+
+    /** Fraction of lines starting with a bullet glyph (`-`, `*`, `•`) after
+      * leading-space strip.
+      */
+    def bulletLineFrac: Column = ratio(count(5), lines)
+
+    /** Fraction of lines ending with an ellipsis (`...` or `…`) after
+      * trailing-space strip.
+      */
+    def ellipsisLineFrac: Column = ratio(count(6), lines)
+
+    /** Fraction of words containing at least one ASCII letter. */
+    def alphaWordFrac: Column = ratio(count(7), words)
+
+    /** How many of [[requiredStopwords]] appear as a lowercased word. Null
+      * text has none (0, as the oracle's `CASE WHEN list_contains` gives).
+      */
+    def requiredStopwordHits: Column = coalesce(count(8), lit(0))
+
+    /** Fraction of NON-BLANK lines that are duplicates of another line in
+      * the doc, excess-occurrence convention: the first occurrence is the
+      * original, every later occurrence is a duplicate — (n − distinct) / n.
+      * Blank-after-trim lines are structural paragraph separators, exempt
+      * from both sides of the ratio (the [[LineDedup]] contract) — a
+      * well-formed multi-paragraph doc repeats its blank separator many
+      * times without being repetitious. Docs with no non-blank lines
+      * score 0.
+      */
+    def dupLineFrac: Column =
+      when(nonBlankLines === 0, lit(0.0))
+        .otherwise(ratio(nonBlankLines - count(10), nonBlankLines))
+
+    /** Fraction of CHARACTERS sitting in duplicate lines — the mass-weighted
+      * twin of [[dupLineFrac]] (one giant duplicated block among many short
+      * unique lines passes the count rule but not this one), same
+      * excess-occurrence convention and the same blank exemption. Docs with
+      * zero non-blank characters score 0.
+      */
+    def dupLineCharFrac: Column =
+      when(count(12) === 0, lit(0.0)).otherwise(ratio(count(11), count(12)))
+
+    /** The Gopher quality verdict: keep iff every structural rule passes.
+      * Thresholds are the published ones (50 ≤ words ≤ 100000, 3 ≤ mean
+      * word length ≤ 10, symbol ratio ≤ 0.1, ≤ 90% bullet lines, ≤ 30%
+      * ellipsis lines, > 80% alphabetic words, ≥ 2 required stopwords).
+      */
+    def qualityKeep: Column =
+      wordCount.between(50, 100000) &&
+        meanWordLength.between(3.0, 10.0) &&
+        symbolToWordRatio <= 0.1 &&
+        bulletLineFrac <= 0.9 &&
+        ellipsisLineFrac <= 0.3 &&
+        alphaWordFrac > 0.8 &&
+        requiredStopwordHits >= minRequiredStopwords
+
+    /** The Gopher repetition verdict over line structure (the n-gram half
+      * of the repetition rules lives in [[TextAnalysis.topNgramCharFrac]] /
+      * [[TextAnalysis.dupNgramCharFrac]]): ≤ 30% duplicate lines by count
+      * and ≤ 20% by character mass.
+      */
+    def repetitionKeep: Column = dupLineFrac <= 0.3 && dupLineCharFrac <= 0.2
   }
 
-  /** Fraction of CHARACTERS sitting in duplicate lines — the mass-weighted
-    * twin of [[dupLineFrac]] (one giant duplicated block among many short
-    * unique lines passes the count rule but not this one), same
-    * excess-occurrence convention and the same blank exemption.
-    * Sort-adjacency: after sorting the non-blank line array, the
-    * duplicates are exactly the elements equal to their predecessor
-    * (all-but-first of each equal run); only equality of equal-sorting
-    * elements matters, so engine collation differences cannot change the
-    * answer. Docs with zero non-blank characters score 0.
+  /** The kernel call on `text`; every call is the same expression, so a
+    * projection runs it once per row.
     */
-  def dupLineCharFrac(text: Column): Column =
-    // The SORTED line array is bound as a lambda variable before the
-    // adjacency sweep reads it: written naively, `element_at(s, i)` with
-    // s = sort_array(filter(split(text))) re-runs the split+filter+SORT
-    // once per line index — O(lines²·log lines) per document (the
-    // lambda-body re-evaluation pitfall documented at
-    // GraftFunctions.bindArray). Bound, each probe is an O(1) buffer read
-    // and the sweep is the O(L log L) the scaladoc above promises.
-    graft.functions.GraftFunctions
-      .bindArray(sort_array(nonBlankLines(text))) { s =>
-        // Explicit empty branch: sequence(1, 0) on a no-line doc would be
-        // the DESCENDING [1, 0] (the repo-wide sequence pitfall —
-        // Sampling.epochRepeat, HeavyHitters.topGrams carry the same
-        // guard), leaving element_at(s, 0) one lazy-evaluation layer away
-        // from an ANSI index error. Starting at 2 also drops the per-
-        // element i > 1 test.
-        val dupChars = aggregate(
-          when(size(s) >= 2, sequence(lit(2), size(s)))
-            .otherwise(array().cast("array<int>")),
-          lit(0L), (acc, i) =>
-          acc + when(element_at(s, i) === element_at(s, i - 1),
-            length(element_at(s, i)).cast("long")).otherwise(0L))
-        val totChars = aggregate(s, lit(0L), (acc, x) => acc + length(x))
-        when(size(s) === 0 || totChars === 0, lit(0.0))
-          .otherwise(dupChars.cast("double") / totChars.cast("double"))
-      }
+  def signals(text: Column): Signals = Signals(GraftFunctions.gopherCounts(text))
 
-  /** The Gopher quality verdict: keep iff every structural rule passes.
-    * Thresholds are the published ones (50 ≤ words ≤ 100000, 3 ≤ mean word
-    * length ≤ 10, symbol ratio ≤ 0.1, ≤ 90% bullet lines, ≤ 30% ellipsis
-    * lines, > 80% alphabetic words, ≥ 2 required stopwords).
-    */
-  def gopherQualityKeep(text: Column): Column =
-    wordCount(text).between(50, 100000) &&
-      meanWordLength(text).between(3.0, 10.0) &&
-      symbolToWordRatio(text) <= 0.1 &&
-      bulletLineFrac(text) <= 0.9 &&
-      ellipsisLineFrac(text) <= 0.3 &&
-      alphaWordFrac(text) > 0.8 &&
-      requiredStopwordHits(text) >= minRequiredStopwords
+  def gopherQualityKeep(text: Column): Column = signals(text).qualityKeep
+  def gopherRepetitionKeep(text: Column): Column = signals(text).repetitionKeep
 
-  /** The Gopher repetition verdict over line structure (the n-gram half of
-    * the repetition rules lives in [[TextAnalysis.topNgramCharFrac]] /
-    * [[TextAnalysis.dupNgramCharFrac]]): ≤ 30% duplicate lines by count
-    * and ≤ 20% by character mass.
+  /** `df` plus column `name` holding the [[signals]] counts of `text`,
+    * bound once per row ([[GraftFunctions.bindRow]]) — for frames that
+    * FILTER on signals, which read them as `Signals(col(name))`.
     */
-  def gopherRepetitionKeep(text: Column): Column =
-    dupLineFrac(text) <= 0.3 && dupLineCharFrac(text) <= 0.2
+  def withSignals(df: DataFrame, text: Column, name: String): DataFrame =
+    GraftFunctions.bindRow(df, GraftFunctions.gopherCounts(text), name)
+
+  /** The rows of `df` whose `text` passes both verdicts, at one kernel call
+    * per row.
+    */
+  def survivors(df: DataFrame, text: Column): DataFrame = {
+    val s = Signals(col("__gopher"))
+    withSignals(df, text, "__gopher")
+      .filter(s.qualityKeep && s.repetitionKeep)
+      .drop("__gopher")
+  }
 
   /** All rule signals + verdicts as columns (the profile a pipeline logs
     * before deciding thresholds; filtering is `.filter(col("keep"))`).
     */
   def withRuleColumns(df: DataFrame, textCol: String): DataFrame = {
-    val t = col(textCol)
-    df.withColumn("n_words", wordCount(t))
-      .withColumn("mean_word_len", meanWordLength(t))
-      .withColumn("symbol_ratio", symbolToWordRatio(t))
-      .withColumn("bullet_frac", bulletLineFrac(t))
-      .withColumn("ellipsis_frac", ellipsisLineFrac(t))
-      .withColumn("alpha_frac", alphaWordFrac(t))
-      .withColumn("stopword_hits", requiredStopwordHits(t))
-      .withColumn("dup_line_frac", dupLineFrac(t))
-      .withColumn("dup_line_char_frac", dupLineCharFrac(t))
-      .withColumn("quality_keep", gopherQualityKeep(t))
-      .withColumn("repetition_keep", gopherRepetitionKeep(t))
+    val s = signals(col(textCol))
+    df.withColumn("n_words", s.wordCount)
+      .withColumn("mean_word_len", s.meanWordLength)
+      .withColumn("symbol_ratio", s.symbolToWordRatio)
+      .withColumn("bullet_frac", s.bulletLineFrac)
+      .withColumn("ellipsis_frac", s.ellipsisLineFrac)
+      .withColumn("alpha_frac", s.alphaWordFrac)
+      .withColumn("stopword_hits", s.requiredStopwordHits)
+      .withColumn("dup_line_frac", s.dupLineFrac)
+      .withColumn("dup_line_char_frac", s.dupLineCharFrac)
+      .withColumn("quality_keep", s.qualityKeep)
+      .withColumn("repetition_keep", s.repetitionKeep)
   }
 }

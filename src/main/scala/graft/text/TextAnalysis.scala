@@ -53,15 +53,13 @@ object TextAnalysis {
   def counts(text: Column, lists: Seq[Seq[String]] = wordLists): Counts =
     Counts(GraftFunctions.textCounts(text, lists), lists)
 
-  /** `df` plus column `name` holding [[counts]] of `text`, made by a
-    * one-row generator. For frames that FILTER on scores: a filter gets no
-    * subexpression elimination, and pushed through a projection it inlines
-    * every scorer's kernel call; it cannot be pushed below a generator
-    * whose output it reads, so scores read from this column cost one
-    * kernel call per row.
+  /** `df` plus column `name` holding [[counts]] of `text`, bound once per
+    * row ([[graft.functions.GraftFunctions.bindRow]]): for frames that
+    * FILTER on scores, which read them as `Counts(col(name))` at one kernel
+    * call per row.
     */
   def withCounts(df: DataFrame, text: Column, name: String): DataFrame =
-    df.select(col("*"), explode(array(counts(text).value)).as(name))
+    GraftFunctions.bindRow(df, counts(text).value, name)
 
   /** Whitespace token count: `size(tokens(text))`, without the array. */
   def tokenCount(text: Column): Column = counts(text).tokens

@@ -405,4 +405,37 @@ class BenchBaselineSpec extends AnyFunSuite {
     // Idempotent: a second sweep over the drained queue is a no-op.
     e.sweepScratchDirs()
   }
+
+  test("compactLine: one complete JSON object within 1,900 bytes, slowest " +
+      "gates kept, the rest counted as omitted") {
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    import scala.jdk.CollectionConverters._
+    def check(n: Int, failed: Seq[String]): (Int, Int) = {
+      // Every real gate name, padded to n with long synthetic ones; gate i
+      // takes i ms + 0.5 s, so the slowest are the last.
+      val names = (SparkEntry.queries.keys.toSeq.sorted ++
+        (0 until n).map(i => f"synthetic_gate_with_a_long_name_$i%04d")).take(n)
+      val entries = names.zipWithIndex.map { case (k, i) => k -> (0.5 + i / 1000.0) }
+      val line = Bench.compactLine(entries, entries.map(_._2).sum, failed,
+        "data/sf0.1")
+      assert(line.getBytes("UTF-8").length <= Bench.CompactLineMaxBytes, line)
+      val json = mapper.readTree(line)
+      val qs = json.get("queries")
+      val shown = qs.fieldNames().asScala.toSeq
+      assert(json.get("n").asInt() === n)
+      assert(json.get("omitted").asInt() === n - qs.size())
+      assert(json.get("n_failed").asInt() === failed.size)
+      // The shown gates are the slowest ones, fastest-first.
+      assert(shown === names.takeRight(qs.size()))
+      (qs.size(), json.get("failed").size())
+    }
+    assert(check(3, Nil) === ((3, 0)))
+    val (shown204, _) = check(204, Seq("a_failed_gate"))
+    assert(shown204 > 20 && shown204 < 204)
+    // 204 failed names do not all fit: as many as the bound allows are
+    // listed, and n_failed counts them all.
+    val (_, failedShown) = check(204,
+      (0 until 204).map(i => f"failed_gate_$i%03d"))
+    assert(failedShown > 0 && failedShown < 204)
+  }
 }

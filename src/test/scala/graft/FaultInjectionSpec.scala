@@ -812,4 +812,32 @@ class FaultInjectionSpec extends AnyFunSuite with BeforeAndAfterEach {
       spark.sql(s"DROP TABLE $t")
     }
   }
+
+  test("scratchTempDir: a library session without SPARK_GRAFT_LOCAL_DIR " +
+      "keeps per-gate scratch off /dev/shm") {
+    import java.nio.file.Paths
+    val e = graft.core.Engine
+    // What Engine.builder chooses without the env var: no spark.local.dir.
+    val library = e.scratchLocalDir(Map.empty, autoFallback = false)
+    assert(library === None)
+    // Only SPARK_GRAFT_LOCAL_DIR=auto opts a library session into the probe.
+    assert(e.scratchLocalDir(Map("SPARK_GRAFT_LOCAL_DIR" -> "auto"),
+      autoFallback = false) === e.scratchLocalDir(Map.empty))
+    // The test session is built the same way, without spark.local.dir.
+    assert(e.sessionLocalDir(spark) === None)
+    val tmp = Paths.get(System.getProperty("java.io.tmpdir")).toAbsolutePath
+    val shm = Paths.get("/dev/shm")
+    val dirs = Seq(e.scratchTempDir("graft-library-spec-", library),
+      e.scratchTempDir("graft-library-spec-"))
+    for (d <- dirs) {
+      assert(d.getParent.toAbsolutePath === tmp)
+      // Outside /dev/shm unless the JVM's own temp dir is there.
+      assert(!d.startsWith(shm) || tmp.startsWith(shm), d)
+    }
+    // A session that chose a scratch dir gets its scratch data there.
+    val chosen = java.nio.file.Files.createTempDirectory("graft-chosen-spec-")
+    val inChosen = e.scratchTempDir("graft-library-spec-", Some(chosen.toString))
+    assert(inChosen.getParent === chosen)
+    (dirs :+ inChosen :+ chosen).foreach(java.nio.file.Files.delete)
+  }
 }

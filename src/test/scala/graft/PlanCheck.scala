@@ -21,6 +21,8 @@ object PlanCheck {
   def nodes(df: DataFrame): Seq[SparkPlan] =
     walk(df.queryExecution.executedPlan)
 
+  def nodes(plan: SparkPlan): Seq[SparkPlan] = walk(plan)
+
   private def walk(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
     case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
     case s: QueryStageExec => walk(s.plan)

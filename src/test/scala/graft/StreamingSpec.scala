@@ -193,6 +193,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming gopher filter keeps exactly the batch rule survivors") {
     import graft.text.QualityRules
+    graft.functions.GraftFunctions.register(spark)
     val srcDir = java.nio.file.Files.createTempDirectory("graft_stream_gopher")
     // The rule filter is stateless and scan-local, so it applies to a
     // stream unchanged — at ingest time, before anything stateful. The
