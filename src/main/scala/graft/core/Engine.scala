@@ -73,9 +73,19 @@ object Engine {
     */
   val ObjAggFallbackDefault: Int = 1 << 16
 
-  /** Runtime performance confs every entry point (Bench/Verify/Scale/
-    * [[session]]) applies — r17 optimization round, guide §5.
+  /** Runtime performance settings every entry point applies: Bench,
+    * Verify, Scale, PlanDump, PlanAudit, [[session]]/[[tune]] and the
+    * benchmark harness. Idempotent; touches only runtime-mutable state of
+    * the one session it is given (a `newSession()` starts without it).
     *
+    * It registers [[SingleTaskSort]] in the session's
+    * `spark.experimental.extraOptimizations` (once, however often it is
+    * called): a global sort over an input no larger than AQE's advisory
+    * partition size shuffles to one task instead of through a range
+    * exchange, which saves the range partitioner's sampling job.
+    *
+    * It also raises the ObjectHashAggregate fallback (r17 optimization
+    * round, guide §5):
     * `spark.sql.objectHashAggregate.sortBased.fallbackThreshold` defaults
     * to 128 distinct groups PER TASK; past it, ObjectHashAggregateExec —
     * the physical operator behind every TypedImperativeAggregate
@@ -111,6 +121,9 @@ object Engine {
     }.getOrElse(ObjAggFallbackDefault)
     spark.conf.set(
       "spark.sql.objectHashAggregate.sortBased.fallbackThreshold", thr)
+    val ex = spark.experimental
+    if (!ex.extraOptimizations.contains(SingleTaskSort))
+      ex.extraOptimizations = ex.extraOptimizations :+ SingleTaskSort
     spark
   }
 

@@ -1876,8 +1876,7 @@ object PipelineQueries {
 
   /** The recall-gate probe set: deterministic 95/5 blends of neighboring
     * corpus vectors under fresh ids (+7,000,000) — close to their source
-    * but NOT byte-identical. Shared with the dev probe tool
-    * (graft.tools.ProbeIvfRecall) and the scale harness (graft.Scale's
+    * but NOT byte-identical. Shared with the scale harness (graft.Scale's
     * ANN legs) so every recall measurement runs the exact workload the
     * gate runs.
     */

@@ -15,6 +15,7 @@ object PlanAudit {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val spark = Engine.builder("local[8]", "graft-plan-audit").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    Engine.perfDefaults(spark)
     graft.functions.GraftFunctions.register(spark)
     val db = "plan_audit_db"
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
@@ -56,6 +57,20 @@ object PlanAudit {
     // Reference relational shapes: pushdown + broadcast sanity.
     println("=== q04 filter/projection pushdown ===")
     graft.queries.RelationalQueries.q04FilterProject(spark, dir).explain()
+
+    // Global sorts (core.SingleTaskSort): a small sort shuffles to ONE task
+    // (Exchange SinglePartition, REPARTITION_BY_NUM — no range sampling
+    // job); a top-K stays a TakeOrderedAndProject with no exchange below
+    // it; a sort whose input estimate passes the advisory partition size
+    // (the brute-force kNN cross join) keeps its rangepartitioning exchange.
+    println("=== global sorts (want SinglePartition / lone TakeOrderedAndProject / rangepartitioning) ===")
+    for ((shape, gate) <- Seq("small sort" -> "q04_filter_project",
+        "top-K" -> "q03_topk_orders", "over-threshold sort" -> "sim_knn_brute")) {
+      val p = graft.SparkEntry.queries(gate)(spark, dir).queryExecution.executedPlan
+      println(s"-- $shape: $gate")
+      println(p.toString.linesIterator.filter(l => l.contains("Exchange") ||
+        l.contains("Sort") || l.contains("TakeOrderedAndProject")).mkString("\n"))
+    }
 
     // Training-data pipeline: the only wide exchanges should be the exact-
     // dedup hash shuffle and the final split aggregate; the benchmark gram
