@@ -1,55 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.Metrics
 object Bench {
-  /** Per-gate structural cost attribution, armed by
-    * SPARK_GRAFT_GATE_PROFILE=1 (stderr diagnostic — never part of the
-    * bench record). Accumulates task metrics on a listener and prints each
-    * gate's delta: executor run time, GC, shuffle read/write bytes, and
-    * spill — the numbers that distinguish "the host stalled" (wall up,
-    * structure flat) from "the plan regressed" (bytes/CPU up), and that
-    * make spill-elimination work (r17 finding 1) checkable without a
-    * quiet-weather wall clock. Same single-tenant caveat as the CC
-    * RoundProfiler: the listener hears the whole context, and the drain
-    * sleep is heuristic — attribution, not accounting.
-    */
-  private final class GateProfiler(sc: org.apache.spark.SparkContext) {
-    import java.util.concurrent.atomic.LongAdder
-    private val runMs, cpuNs, gcMs, srB, swB, spillMemB, spillDiskB =
-      new LongAdder
-    private val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          // executorRunTime is task WALL time (weather-inflated on a
-          // throttled host); executorCpuTime is actual CPU consumed — the
-          // structural cost of the work, comparable across noisy runs.
-          runMs.add(m.executorRunTime); cpuNs.add(m.executorCpuTime)
-          gcMs.add(m.jvmGCTime)
-          srB.add(m.shuffleReadMetrics.totalBytesRead)
-          swB.add(m.shuffleWriteMetrics.bytesWritten)
-          spillMemB.add(m.memoryBytesSpilled)
-          spillDiskB.add(m.diskBytesSpilled)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    private def snap(): Seq[Long] = Seq(runMs.sum, cpuNs.sum, gcMs.sum,
-      srB.sum, swB.sum, spillMemB.sum, spillDiskB.sum)
-    private var last = snap()
-    def gate(name: String, wallSec: Double): Unit = {
-      Thread.sleep(150) // drain the async listener bus (diagnostic only)
-      val cur = snap()
-      val d = cur.lazyZip(last).map(_ - _)
-      last = cur
-      def mb(b: Long): String = f"${b / 1048576.0}%.1f"
-      System.err.println(f"[gate-profile] $name%-28s wall=$wallSec%7.2fs " +
-        f"taskWall=${d(0) / 1000.0}%7.1fs cpu=${d(1) / 1e9}%7.1fs " +
-        f"gc=${d(2) / 1000.0}%5.1fs " +
-        f"shufR=${mb(d(3))}%8sMB shufW=${mb(d(4))}%8sMB " +
-        f"spillMem=${mb(d(5))}%9sMB spillDisk=${mb(d(6))}%9sMB")
-    }
-  }
   /** Per-query seconds from a recorded BENCH_r*.json / BASELINE_r*.json.
     * The driver wraps the bench stdout line in a "tail" string (quotes
     * escaped), so strip backslashes before matching; a blessed baseline is
@@ -425,16 +377,9 @@ object Bench {
     // Runtime perf confs shared by every entry point (r17: keeps the
     // bounded typed aggregates in hash mode — Engine.perfDefaults scaladoc).
     graft.core.Engine.perfDefaults(spark)
-    // Per-gate structural metrics (SPARK_GRAFT_GATE_PROFILE=1, stderr
-    // only): listener-accumulated executor run time, shuffle bytes and
-    // spill per gate — attribution that survives the host's CPU/disk
-    // throttling windows, which make raw wall-clock A/Bs on this sandbox
-    // inconclusive (OPTIMIZATION_r17.md). Diagnostic only: the driver
-    // never sets the env, and the timed region is untouched.
-    val gateProfiler =
-      if (sys.env.get("SPARK_GRAFT_GATE_PROFILE").contains("1"))
-        Some(new GateProfiler(spark.sparkContext))
-      else None
+    // Per-gate task metrics by job tag; the listener runs off the clock.
+    val metrics = new Metrics
+    spark.sparkContext.addSparkListener(metrics)
     // Warm-up: pay JVM/codegen/IO-pool/page-cache boot before the first
     // timed query so timings reflect steady-state engine cost, not session
     // startup. The tiny nation scan alone proved insufficient (the first
@@ -543,7 +488,7 @@ object Bench {
       .map { case ((name, fn), gateIdx) =>
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).count(); true }
+        try { Metrics.tagged(spark.sparkContext, Metrics.gateTag(name))(fn(spark, sfDir).count()); true }
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
           false
@@ -574,7 +519,6 @@ object Bench {
       // must stay flat across the run, not ratchet upward).
       val storageBytes = spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum
-      gateProfiler.foreach(_.gate(name, elapsed)) // off the clock
       (name, elapsed, ok, storageBytes, gateIdx)
     }
     // Regression guard: per-query ratio vs BOTH the first recorded round
@@ -707,7 +651,11 @@ object Bench {
     val storages = results.map(_._4)
     if (storages.nonEmpty)
       println(s"""{"metric":"storage_after_release_bytes","max":${storages.max},"end":${storages.last},"nonzero_gates":${storages.count(_ > 0)}}""")
-    spark.stop()
+    spark.stop() // drains the listener bus: the metrics are complete
+    Metrics.write(java.nio.file.Paths.get("target", "gate_metrics.jsonl"),
+      results.map { case (k, v, ok, _, _) =>
+        metrics.line(s""""gate":"$k","wall_s":${num(v, 3)},"ok":$ok""", _(Metrics.gateTag(k)))
+      })
     // LAST stdout line by design — see [[compactLine]]. Everything the
     // driver's bounded tail keeps beyond this point is compact per-gate
     // record, maximizing how many gates survive into PERF's per_query.

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Metrics
 import graft.queries.MaterializationQueries.contentWitness
 
 /** Off-gate scale stress: self-replicate the sf0.1 corpus ×k with shifted
@@ -67,50 +68,6 @@ object Scale {
     (r, (System.nanoTime() - t0) / 1e9)
   }
 
-  /** Per-stage straggler evidence, armed by SPARK_GRAFT_STAGE_SKEW=1
-    * (stderr diagnostic — guide §2.5: a max/median task-duration ratio
-    * ≳5 is the skew signature; the 100 TB claim that the capped-bucket
-    * LSH design bounds skew needs measured ratios ≈1 on the hot band
-    * aggregation stages at an amplified scale, not a design argument —
-    * r17 verdict item 8). One line per completed stage with ≥ 8 tasks:
-    * task count, median/max duration, max/median ratio, and the stage's
-    * max shuffle-read task bytes so a duration outlier can be attributed
-    * to data volume vs a sick executor. Same single-tenant caveat as the
-    * other diagnostic listeners. Tasks are kept per stage ATTEMPT: a
-    * retried stage reports each attempt on its own, never mixing the
-    * attempts' tasks. Lines go to `report`.
-    */
-  private[graft] final class StageSkewReporter(
-      report: String => Unit = System.err.println(_))
-      extends org.apache.spark.scheduler.SparkListener {
-    private val durs = new java.util.concurrent.ConcurrentHashMap[
-      (Int, Int), java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]]()
-    override def onTaskEnd(
-        e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (e.taskInfo != null && m != null)
-        durs.computeIfAbsent((e.stageId, e.stageAttemptId),
-          _ => new java.util.concurrent.ConcurrentLinkedQueue[(Long, Long)]())
-          .add((e.taskInfo.duration, m.shuffleReadMetrics.totalBytesRead))
-    }
-    override def onStageCompleted(
-        e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val s = e.stageInfo
-      val q = durs.remove((s.stageId, s.attemptNumber()))
-      if (q != null && q.size >= 8) {
-        import scala.jdk.CollectionConverters._
-        val ds = q.asScala.map(_._1).toArray.sorted
-        val med = math.max(ds(ds.length / 2), 1L)
-        val maxSr = q.asScala.map(_._2).max
-        report(f"[stage-skew] stage=${s.stageId}%-5d attempt=${s.attemptNumber()}%-2d " +
-          f"tasks=${ds.length}%-4d med=${med / 1000.0}%6.2fs " +
-          f"max=${ds.last / 1000.0}%6.2fs ratio=${ds.last.toDouble / med}%5.2f " +
-          f"maxShufR=${maxSr / 1048576.0}%8.1fMB  " +
-          s.name.takeWhile(_ != '\n').take(60))
-      }
-    }
-  }
-
   /** (count, Σ xxhash64(row)) over a projection — the multiset witness.
     * For replica-disjoint operators the ×k witness is exactly k × the ×1
     * witness when the projection maps ids back to original space.
@@ -162,8 +119,9 @@ object Scale {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.core.Engine.perfDefaults(spark)
-    if (sys.env.get("SPARK_GRAFT_STAGE_SKEW").contains("1"))
-      spark.sparkContext.addSparkListener(new StageSkewReporter())
+    // Task metrics per op and stage attempt, incl. the skew view.
+    val metrics = new Metrics
+    spark.sparkContext.addSparkListener(metrics)
     import spark.implicits._
 
     // ------------------------------------------------------------ staging
@@ -255,7 +213,7 @@ object Scale {
         s"op '$name' is not in the staging registry (tableOps) — register " +
           "which table it reads before adding the run block")
       if (only.exists(!_.contains(name))) return
-      val (r1, rk, s1, sk, inv) = body
+      val (r1, rk, s1, sk, inv) = Metrics.tagged(spark.sparkContext, Metrics.gateTag(name))(body)
       val storage = release()
       require(storage == 0L, s"$name left $storage bytes in executor storage")
       val res = OpResult(name, k, r1, rk, s1, sk, storage, inv)
@@ -1031,7 +989,12 @@ object Scale {
         f""""sec_x1":${r.sec1}%.2f,"sec_xk":${r.secK}%.2f}"""
     }.mkString("{", ",", "}")
     println(s"""SCALE-JSON {"k":$k,"ops":$json,"all_invariants":"OK"}""")
-    spark.stop()
+    spark.stop() // drains the listener bus: the metrics are complete
+    // One line per op, then one for the stage attempts no op owns (staging),
+    // so every stage attempt of the run appears exactly once.
+    Metrics.write(java.nio.file.Paths.get("target", s"scale_metrics_x$k.jsonl"),
+      results.toSeq.map(r => metrics.line(s""""op":"${r.name}"""", _(Metrics.gateTag(r.name)))) :+
+        metrics.line(""""op":null""", ts => !results.exists(r => ts(Metrics.gateTag(r.name)))))
   }
 
   private def log(msg: String): Unit = println(s"[scale] $msg")

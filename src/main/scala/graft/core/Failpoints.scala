@@ -22,11 +22,11 @@ object Failpoints {
   final class Injected(val point: String)
       extends RuntimeException(s"failpoint fired: $point")
 
-  @volatile private var armed: Map[String, Int] = Map.empty
+  @volatile private var armed: Map[String, (Int, Int)] = Map.empty
 
-  /** Arm `point` to fire on its next `times` traversals. */
-  def arm(point: String, times: Int = 1): Unit = synchronized {
-    armed = armed.updated(point, times)
+  /** Arm `point` to fire on its `times` traversals after the next `after`. */
+  def arm(point: String, times: Int = 1, after: Int = 0): Unit = synchronized {
+    armed = armed.updated(point, (after, times))
   }
 
   def disarmAll(): Unit = synchronized { armed = Map.empty }
@@ -35,8 +35,9 @@ object Failpoints {
   def check(point: String): Unit =
     if (armed.nonEmpty) synchronized {
       armed.get(point) match {
-        case Some(n) if n > 0 =>
-          armed = if (n == 1) armed - point else armed.updated(point, n - 1)
+        case Some((pass, n)) if pass > 0 => armed = armed.updated(point, (pass - 1, n))
+        case Some((_, n)) if n > 0 =>
+          armed = if (n == 1) armed - point else armed.updated(point, (0, n - 1))
           throw new Injected(point)
         case _ => ()
       }

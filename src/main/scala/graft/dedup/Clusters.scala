@@ -3,6 +3,8 @@ package graft.dedup
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.{Failpoints, Metrics, ScopedStorage}
+
 /** Connected components over a near-duplicate pair graph — the step that
   * turns pairwise dedup output (a ~ b, b ~ c) into whole duplicate CLUSTERS
   * (keep one of {a, b, c}), without which transitive duplicates survive
@@ -66,61 +68,6 @@ import org.apache.spark.sql.functions._
   */
 object Clusters {
 
-  /** Per-round cost attribution for [[connectedComponents]], armed by
-    * SPARK_GRAFT_CC_PROFILE=1 (diagnostic only — default path pays one env
-    * read per call and nothing else). Listener-accumulated task metrics are
-    * snapshotted around each round so the round's delta separates compute
-    * (executor run time), GC, shuffle read/write bytes, and spill; executor
-    * storage is sampled after the round's checkpoint swap so the resident
-    * label-frame cost is visible next to the shuffle numbers. The listener
-    * bus is asynchronous — a short post-round sleep lets it drain, which is
-    * fine for a diagnostic and unacceptable anywhere else.
-    *
-    * SINGLE-TENANT ASSUMPTION: the listener hears every stage on the
-    * shared SparkContext, so any concurrent job in the same session
-    * (parallel suites, another query on a shared engine) pollutes the
-    * per-round deltas; and the fixed drain sleep can under-drain a busy
-    * bus, shifting a stage's metrics into the next round's delta. Profile
-    * on an otherwise-idle session only, and treat the numbers as
-    * attribution, not accounting.
-    */
-  private final class RoundProfiler(sc: org.apache.spark.SparkContext) {
-    import java.util.concurrent.atomic.LongAdder
-    private val runMs, gcMs, srB, swB, spillMemB, spillDiskB = new LongAdder
-    private val nStages = new LongAdder
-    private val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val m = e.stageInfo.taskMetrics
-        if (m != null) {
-          nStages.add(1)
-          runMs.add(m.executorRunTime); gcMs.add(m.jvmGCTime)
-          srB.add(m.shuffleReadMetrics.totalBytesRead)
-          swB.add(m.shuffleWriteMetrics.bytesWritten)
-          spillMemB.add(m.memoryBytesSpilled); spillDiskB.add(m.diskBytesSpilled)
-        }
-      }
-    }
-    sc.addSparkListener(listener)
-    private def snap(): Seq[Long] = Seq(runMs.sum, gcMs.sum, srB.sum, swB.sum,
-      spillMemB.sum, spillDiskB.sum, nStages.sum)
-    private var last = snap()
-    private def mb(b: Long): String = f"${b / 1048576.0}%.1f"
-    def round(label: String, wallSec: Double, changed: Long): Unit = {
-      Thread.sleep(150) // drain the async listener bus (diagnostic only)
-      val cur = snap()
-      val d = cur.lazyZip(last).map(_ - _)
-      last = cur
-      val storageB = sc.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum
-      System.err.println(f"[cc-profile] $label%-8s wall=$wallSec%6.2fs " +
-        f"changed=$changed%,12d stages=${d(6)}%3d execCpu=${d(0) / 1000.0}%7.1fs " +
-        f"gc=${d(1) / 1000.0}%5.1fs shufR=${mb(d(2))}%8sMB shufW=${mb(d(3))}%8sMB " +
-        f"spillMem=${mb(d(4))}%8sMB spillDisk=${mb(d(5))}%8sMB " +
-        f"storage=${mb(storageB)}%8sMB")
-    }
-    def close(): Unit = sc.removeSparkListener(listener)
-  }
-
   /** Cluster assignment for every node in `pairs` (columns (id_a, id_b), one
     * undirected edge per row): returns (id, cluster) where cluster = the
     * minimum id reachable from the node. Nodes absent from `pairs`
@@ -147,18 +94,6 @@ object Clusters {
     */
   def connectedComponents(pairs: DataFrame, maxRounds: Int = 30,
       returnPartial: Boolean = false): DataFrame = {
-    val profiler =
-      if (sys.env.get("SPARK_GRAFT_CC_PROFILE").contains("1"))
-        Some(new RoundProfiler(pairs.sparkSession.sparkContext))
-      else None
-    // finally, not success-path-only: a mid-round failure must not leave
-    // the diagnostic listener registered on the shared context.
-    try ccRounds(pairs, maxRounds, returnPartial, profiler)
-    finally profiler.foreach(_.close())
-  }
-
-  private def ccRounds(pairs: DataFrame, maxRounds: Int,
-      returnPartial: Boolean, profiler: Option[RoundProfiler]): DataFrame = {
     // Double the edge list in ONE pass with explode, not a self-union: the
     // union's two branches are separate Catalyst subtrees, so it would
     // evaluate the caller's (possibly expensive — a whole LSH pipeline)
@@ -194,150 +129,143 @@ object Clusters {
       .repartition(nPart, col("src"))
       .sortWithinPartitions(col("src"))
       .persist()
-    val nEdges = edges.count() // materialize the cache once, up front.
+    val sc = pairs.sparkSession.sparkContext
+    val call = Metrics.nextCall()
+    // Checkpoints not yet freed. However the call ends (converged, out of
+    // rounds, a task failure, a cancelled job group), the edge cache goes and
+    // these go to the gate-scoped registry, as clearCache() cannot see them.
+    val live = scala.collection.mutable.ListBuffer[DataFrame]()
+    try {
+      val nEdges = edges.count() // materialize the cache once, up front.
 
-    var state = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id"))
-      .localCheckpoint()
-    var labels = state.select(col("id"), col("cluster"))
-    // The frontier: labels adopted last round and not yet offered to their
-    // neighbors. Round 1 offers everything (every label is new); later
-    // rounds offer only the changed rows — a projection of the state
-    // checkpoint, never a separate materialization.
-    var frontier = state.select(col("id").as("src"), col("cluster"))
+      var state = edges.select(col("src").as("id")).distinct()
+        .withColumn("cluster", col("id"))
+        .localCheckpoint()
+      live += state
+      var labels = state.select(col("id"), col("cluster"))
+      // The frontier: labels adopted last round and not yet offered to their
+      // neighbors. Round 1 offers everything (every label is new); later
+      // rounds offer only the changed rows — a projection of the state
+      // checkpoint, never a separate materialization.
+      var frontier = state.select(col("id").as("src"), col("cluster"))
 
-    var round = 0
-    // Emptiness falls out of the materialization count already paid above
-    // — a separate isEmpty would schedule one more job per call.
-    var converged = nEdges == 0L
-    profiler.foreach(_.round("setup", 0.0, -1L))
-    while (!converged && round < maxRounds) {
-      val roundT0 = System.nanoTime()
-      // Neighbor phase over ACTIVE edges only: the static cached edge side
-      // pays no exchange/sort (see above); the frontier side shrinks to
-      // broadcast size as the graph converges, so a late round's join
-      // touches only the edges incident to still-moving labels. ROUND 1 is
-      // special-cased algebraically: its frontier is the identity labeling
-      // (label(u) = u = the edge's own src column), so joining it in would
-      // only re-derive a column the edges already carry — the full-graph
-      // round that dominates wall time (×64 profile: 44 s of a 185 s leg,
-      // with the frontier exchange + probe of the whole persisted edge
-      // list) collapses to one aggregation over the pre-partitioned edges.
-      val cand = (if (round == 0) edges.select(col("dst"), col("src").as("cluster"))
-        else edges.join(frontier, "src"))
-        .groupBy(col("dst").as("id"))
-        .agg(min(col("cluster")).as("__nbr"))
-      // Probe the JOINED per-round shape (round ≥ 2): round 1's algebraic
-      // specialization has no frontier join, so it is not the plan whose
-      // static-side exchange placement the spec pins.
-      if (round > 0) graft.core.PlanProbe.offer("cc_neighbor", cand)
-      // Merge phase: LEFT join — only nodes adjacent to the frontier have a
-      // candidate; everyone else keeps their label. `__old` is carried so
-      // the round's change set falls out of the same frame with no extra
-      // join against the previous state. Lazily checkpointed because the
-      // jump below consumes it TWICE (probe side and parent-map source) —
-      // Catalyst would re-evaluate the join subtree per side; the
-      // checkpoint shares one materialization.
-      val stepped = labels.join(cand, Seq("id"), "left")
-        .select(col("id"), col("cluster").as("__old"),
-          least(col("cluster"), coalesce(col("__nbr"), col("cluster")))
-            .as("cluster"))
-        .localCheckpoint(false)
-      // Pointer jump: label(u) ← label(label(u)). Every label value is a
-      // node id of the same component (labels start as ids and only adopt
-      // other members' labels); the parent's label is ≤ its own id by
-      // monotonicity, so least() is just defensive clarity.
-      //
-      // Skew shape: a naive self-join keyed by label would funnel a
-      // converged giant component's rows (all sharing one label) into ONE
-      // shuffle partition. Instead the jump goes through the DISTINCT
-      // probed labels: the distinct's partial aggregation collapses the
-      // hot label map-side before any exchange, and only NON-ROOT parents
-      // (__pp ≠ cluster — chains the jump still has to flatten) survive
-      // into the parent map. Both its join keys are unique — no skew — and
-      // it SHRINKS TO EMPTY exactly as components converge, i.e. precisely
-      // when a hot label could exist. By then it is a frame AQE
-      // broadcasts, so the skewed probe never shuffles on the hot key; in
-      // the in-between regime (many labels, sort-merge chosen) labels are
-      // still diverse and AQE's skew-join split remains the backstop.
-      val parentOf = stepped.select(col("cluster")).distinct()
-        .join(stepped.select(col("id").as("cluster"), col("cluster").as("__pp")),
-          Seq("cluster"))
-        .filter(col("__pp") =!= col("cluster"))
-      val jumped = stepped.join(parentOf, Seq("cluster"), "left")
-        .select(col("id"), col("__old"),
-          least(col("cluster"), coalesce(col("__pp"), col("cluster")))
-            .as("cluster"))
-        .select(col("id"), col("cluster"),
-          (col("cluster") =!= col("__old")).as("__chg"))
-      // Lazy checkpoint: the changed-row count below is the single action
-      // that materializes this round's state — two jobs per round would
-      // double the scheduling constant of every round. Zero changed rows
-      // IS the fixed point: monotone labels mean every change strictly
-      // decreases a label, and an empty change set means every label has
-      // been offered to all neighbors and held.
-      val prev = state
-      state = jumped.localCheckpoint(false)
-      val nChanged = state.filter(col("__chg")).count()
-      // This round's state is now materialized into its own checkpoint
-      // (lineage truncated), so the previous round's state and this
-      // round's intermediate `stepped` can never be read again — free both
-      // so a k-round run holds TWO label-frame copies in executor storage,
-      // not k+1 (at 10^9 nodes × 10 rounds the difference is the whole
-      // storage pool).
-      freeCheckpoint(prev)
-      freeCheckpoint(stepped)
-      labels = state.select(col("id"), col("cluster"))
-      frontier = state.filter(col("__chg"))
-        .select(col("id").as("src"), col("cluster"))
-      converged = nChanged == 0L
-      round += 1
-      profiler.foreach(_.round(s"round $round",
-        (System.nanoTime() - roundT0) / 1e9, nChanged))
-    }
-    if (!converged && !returnPartial) {
-      // Diagnose before dying: at a fixed point adjacent nodes hold equal
-      // labels, so the edges whose endpoints still disagree are exactly the
-      // unfinished merges. Two id-partitioned joins + a count — cheap
-      // relative to the rounds already run — and the sample names the
-      // region of the graph that stalled.
-      val unstable = edges
-        .join(labels.select(col("id").as("src"), col("cluster").as("__ls")), "src")
-        .join(labels.select(col("id").as("dst"), col("cluster").as("__ld")), "dst")
-        .filter(col("__ls") =!= col("__ld") && col("src") < col("dst"))
-      val nUnstable = unstable.count()
-      val sample = unstable.select(col("src"), col("dst")).limit(5).collect()
-        .map(r => s"(${r.get(0)}, ${r.get(1)})").mkString(", ")
-      // The throw path must not leak what the success path releases: the
-      // edge cache unpersists (the diagnostic above was its last reader)
-      // and the final round's checkpoint registers with the scoped
-      // registry — checkpoint blocks are invisible to clearCache(), so an
-      // unregistered throw would pin a full label frame until driver GC
-      // (the r08 leak class) every time a pathological graph errors out.
+      var round = 0
+      // Emptiness falls out of the materialization count already paid above
+      // — a separate isEmpty would schedule one more job per call.
+      var converged = nEdges == 0L
+      while (!converged && round < maxRounds) {
+        round += 1
+        Metrics.tagged(sc, Metrics.roundTag(call, round)) {
+          // Neighbor phase over ACTIVE edges only: the static cached edge side
+          // pays no exchange/sort (see above); the frontier side shrinks to
+          // broadcast size as the graph converges, so a late round's join
+          // touches only the edges incident to still-moving labels. ROUND 1 is
+          // special-cased algebraically: its frontier is the identity labeling
+          // (label(u) = u = the edge's own src column), so joining it in would
+          // only re-derive a column the edges already carry — the full-graph
+          // round that dominates wall time (×64 profile: 44 s of a 185 s leg,
+          // with the frontier exchange + probe of the whole persisted edge
+          // list) collapses to one aggregation over the pre-partitioned edges.
+          val cand = (if (round == 1) edges.select(col("dst"), col("src").as("cluster"))
+            else edges.join(frontier, "src"))
+            .groupBy(col("dst").as("id"))
+            .agg(min(col("cluster")).as("__nbr"))
+          // Probe the JOINED per-round shape (round ≥ 2): round 1's algebraic
+          // specialization has no frontier join, so it is not the plan whose
+          // static-side exchange placement the spec pins.
+          if (round > 1) graft.core.PlanProbe.offer("cc_neighbor", cand)
+          // Merge phase: LEFT join — only nodes adjacent to the frontier have a
+          // candidate; everyone else keeps their label. `__old` is carried so
+          // the round's change set falls out of the same frame with no extra
+          // join against the previous state. Lazily checkpointed because the
+          // jump below consumes it TWICE (probe side and parent-map source) —
+          // Catalyst would re-evaluate the join subtree per side; the
+          // checkpoint shares one materialization.
+          val stepped = labels.join(cand, Seq("id"), "left")
+            .select(col("id"), col("cluster").as("__old"),
+              least(col("cluster"), coalesce(col("__nbr"), col("cluster")))
+                .as("cluster"))
+            .localCheckpoint(false)
+          live += stepped
+          // Pointer jump: label(u) ← label(label(u)). Every label value is a
+          // node id of the same component (labels start as ids and only adopt
+          // other members' labels); the parent's label is ≤ its own id by
+          // monotonicity, so least() is just defensive clarity.
+          //
+          // Skew shape: a naive self-join keyed by label would funnel a
+          // converged giant component's rows (all sharing one label) into ONE
+          // shuffle partition. Instead the jump goes through the DISTINCT
+          // probed labels: the distinct's partial aggregation collapses the
+          // hot label map-side before any exchange, and only NON-ROOT parents
+          // (__pp ≠ cluster — chains the jump still has to flatten) survive
+          // into the parent map. Both its join keys are unique — no skew — and
+          // it SHRINKS TO EMPTY exactly as components converge, i.e. precisely
+          // when a hot label could exist. By then it is a frame AQE
+          // broadcasts, so the skewed probe never shuffles on the hot key; in
+          // the in-between regime (many labels, sort-merge chosen) labels are
+          // still diverse and AQE's skew-join split remains the backstop.
+          val parentOf = stepped.select(col("cluster")).distinct()
+            .join(stepped.select(col("id").as("cluster"), col("cluster").as("__pp")),
+              Seq("cluster"))
+            .filter(col("__pp") =!= col("cluster"))
+          val jumped = stepped.join(parentOf, Seq("cluster"), "left")
+            .select(col("id"), col("__old"),
+              least(col("cluster"), coalesce(col("__pp"), col("cluster")))
+                .as("cluster"))
+            .select(col("id"), col("cluster"),
+              (col("cluster") =!= col("__old")).as("__chg"))
+          // Lazy checkpoint: the changed-row count below is the single action
+          // that materializes this round's state — two jobs per round would
+          // double the scheduling constant of every round. Zero changed rows
+          // IS the fixed point: monotone labels mean every change strictly
+          // decreases a label, and an empty change set means every label has
+          // been offered to all neighbors and held.
+          val prev = state
+          state = jumped.localCheckpoint(false)
+          live += state
+          val nChanged = state.filter(col("__chg")).count()
+          Failpoints.check("cc.round")
+          // This round's state is now materialized into its own checkpoint
+          // (lineage truncated), so the previous round's state and this
+          // round's intermediate `stepped` can never be read again — free both
+          // so a k-round run holds TWO label-frame copies in executor storage,
+          // not k+1 (at 10^9 nodes × 10 rounds the difference is the whole
+          // storage pool).
+          ScopedStorage.freeCheckpoint(prev)
+          ScopedStorage.freeCheckpoint(stepped)
+          live --= Seq(prev, stepped)
+          labels = state.select(col("id"), col("cluster"))
+          frontier = state.filter(col("__chg"))
+            .select(col("id").as("src"), col("cluster"))
+          converged = nChanged == 0L
+        }
+      }
+      if (!converged && !returnPartial) {
+        // Diagnose before dying: at a fixed point adjacent nodes hold equal
+        // labels, so the edges whose endpoints still disagree are exactly the
+        // unfinished merges. Two id-partitioned joins + a count — cheap
+        // relative to the rounds already run — and the sample names the
+        // region of the graph that stalled.
+        val unstable = edges
+          .join(labels.select(col("id").as("src"), col("cluster").as("__ls")), "src")
+          .join(labels.select(col("id").as("dst"), col("cluster").as("__ld")), "dst")
+          .filter(col("__ls") =!= col("__ld") && col("src") < col("dst"))
+        val nUnstable = unstable.count()
+        val sample = unstable.select(col("src"), col("dst")).limit(5).collect()
+          .map(r => s"(${r.get(0)}, ${r.get(1)})").mkString(", ")
+        throw new IllegalStateException(
+          s"connectedComponents did not converge in $maxRounds rounds: " +
+            s"$nUnstable edge(s) still span two provisional clusters " +
+            s"(sample: $sample). Pass returnPartial = true to accept a " +
+            "provisional (possibly split, never over-merged) clustering " +
+            "instead.")
+      }
+      labels
+    } finally {
       edges.unpersist(blocking = false)
-      graft.core.ScopedStorage.registerCheckpoint(state)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds: " +
-          s"$nUnstable edge(s) still span two provisional clusters " +
-          s"(sample: $sample). Pass returnPartial = true to accept a " +
-          "provisional (possibly split, never over-merged) clustering " +
-          "instead.")
+      live.foreach(ScopedStorage.registerCheckpoint)
     }
-    // The edge list is only needed by the rounds (and the diagnostic
-    // above); cached blocks release through the cache manager directly.
-    edges.unpersist(blocking = false)
-    // The RETURNED state checkpoint outlives this call by design (the
-    // caller reads the labels projection of it), so it cannot be freed
-    // here — register it with the gate-scoped registry so the harness
-    // releases it at the query boundary instead of leaking it until driver
-    // GC (the r08 class of leak: clearCache() never sees checkpoint
-    // blocks).
-    graft.core.ScopedStorage.registerCheckpoint(state)
-    labels
   }
-
-  private def freeCheckpoint(df: DataFrame): Unit =
-    graft.core.ScopedStorage.freeCheckpoint(df) // one shared contract
 
   /** Pairwise near-dup output → one surviving id per duplicate cluster: the
     * cluster's canonical (minimum) id. Singleton docs never enter `pairs`

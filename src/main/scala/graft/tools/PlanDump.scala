@@ -9,8 +9,8 @@ import java.nio.file.{Files, Paths}
   *
   * The session mirrors Bench's (same cpu/shuffle-partition/perf confs), so
   * the dumped INITIAL plans are the ones the bench executes — AQE's final
-  * plans differ at runtime (coalesced reads, broadcast rewrites), which the
-  * gate-profile listener and PlanAudit cover instead.
+  * plans differ at runtime (coalesced reads, broadcast rewrites), which
+  * Bench's record (target/gate_metrics.jsonl) and PlanAudit cover instead.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

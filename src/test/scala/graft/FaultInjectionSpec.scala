@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Failpoints
+import graft.core.{Failpoints, ScopedStorage}
 import graft.materialize.{Contracts, IncrementalConfig, IncrementalMaterialization, IncrementalStrategy, RelationOps, SnapshotConfig, SnapshotMaterialization, SnapshotStrategy, Staging}
 import graft.materialize.Contracts.ColumnSpec
 import graft.quality.Governance
@@ -27,6 +27,8 @@ import graft.quality.Governance
   *                           of its destructive window (Staging.stagedCommit;
   *                           covers unpartitioned merge, partition-scoped
   *                           merge, and both snapshot paths)
+  *   - `cc.round`          — a connected-components round dies after its
+  *                           count (Clusters): nothing stays pinned
   */
 class FaultInjectionSpec extends AnyFunSuite with BeforeAndAfterEach {
   import SparkTestSession._
@@ -839,5 +841,18 @@ class FaultInjectionSpec extends AnyFunSuite with BeforeAndAfterEach {
     val inChosen = e.scratchTempDir("graft-library-spec-", Some(chosen.toString))
     assert(inChosen.getParent === chosen)
     (dirs :+ inChosen :+ chosen).foreach(java.nio.file.Files.delete)
+  }
+
+  test("a connected-components round that throws leaves no storage after " +
+      "the gate-scoped release") {
+    spark.catalog.clearCache()
+    ScopedStorage.releaseAll(blocking = true)
+    // Round 2 of a 40-node path: the edge cache and three checkpoints live.
+    Failpoints.arm("cc.round", after = 1)
+    intercept[Failpoints.Injected](graft.dedup.Clusters.connectedComponents(
+      (0L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b")))
+    ScopedStorage.releaseAll(blocking = true) // no clearCache(): the edge cache too
+    org.apache.spark.GraftSparkAccess.drainListenerBus(spark.sparkContext)
+    assert(spark.sparkContext.getRDDStorageInfo.map(i => i.memSize + i.diskSize).sum === 0L)
   }
 }

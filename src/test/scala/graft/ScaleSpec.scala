@@ -64,32 +64,4 @@ class ScaleSpec extends AnyFunSuite {
         .groupBy("text").agg((count(lit(1)) / k).cast("long").as("n")))
     assert(aggK === agg1)
   }
-
-  test("stage-skew reporter: each attempt of a retried stage reports its own tasks") {
-    import org.apache.spark.GraftSparkAccess
-    import org.apache.spark.scheduler.{SparkListenerStageCompleted, SparkListenerTaskEnd, StageInfo}
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val reporter = new Scale.StageSkewReporter(l => lines.add(l))
-    def taskEnd(attempt: Int, id: Long, durMs: Long) = SparkListenerTaskEnd(
-      7, attempt, "ResultTask", org.apache.spark.Success,
-      GraftSparkAccess.finishedTask(id, 1000L, 1000L + durMs),
-      GraftSparkAccess.emptyExecutorMetrics(), GraftSparkAccess.emptyTaskMetrics())
-    def stageDone(attempt: Int) = SparkListenerStageCompleted(
-      new StageInfo(7, attempt, "stage seven", 10, Nil, Nil, "details",
-        resourceProfileId = 0))
-    // Attempt 0: nine 100 ms tasks and one 900 ms straggler. The retry's
-    // ten 50 ms tasks end before attempt 0 reports completion.
-    (0 until 9).foreach(i => reporter.onTaskEnd(taskEnd(0, i, 100)))
-    reporter.onTaskEnd(taskEnd(0, 9, 900))
-    (0 until 10).foreach(i => reporter.onTaskEnd(taskEnd(1, 100 + i, 50)))
-    reporter.onStageCompleted(stageDone(0))
-    reporter.onStageCompleted(stageDone(1))
-    import scala.jdk.CollectionConverters._
-    val Seq(first, retry) = lines.asScala.toSeq
-    assert(first.contains("stage=7") && first.contains("attempt=0"), first)
-    assert(first.contains("tasks=10") && first.contains("max=  0.90s") &&
-      first.contains("ratio= 9.00"), first)
-    assert(retry.contains("attempt=1") && retry.contains("tasks=10") &&
-      retry.contains("max=  0.05s") && retry.contains("ratio= 1.00"), retry)
-  }
 }

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.GraftSparkAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, InterpretedOrdering, SortOrder}
@@ -14,7 +11,7 @@ import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExcha
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.{Engine, SingleTaskSort, Tables}
+import graft.core.{Engine, Metrics, SingleTaskSort, Tables}
 
 /** [[SingleTaskSort]]: a small global sort shuffles to one task (no range
   * partitioner, so no sampling job); a top-K, an input that already ends
@@ -45,23 +42,8 @@ class SingleTaskSortSpec extends AnyFunSuite {
 
   /** Jobs `action` runs, counted through a job tag. */
   private def jobsOf(spark: SparkSession)(action: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = s"single-task-sort-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag))) n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try action
-    finally {
-      sc.removeJobTag(tag)
-      GraftSparkAccess.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
+    val (sc, tag) = (spark.sparkContext, s"single-task-sort-${java.util.UUID.randomUUID()}")
+    GraftSparkAccess.recorded(sc)(Metrics.tagged(sc, tag)(action)).group(_(tag))._1
   }
 
   private def noopWrite(df: DataFrame): Unit =
