@@ -5,9 +5,10 @@ seconds, ratio, sorted by absolute delta. Usage:
 A = before, B = after. Also prints totals and geomean speedup (A/B) over
 gates present in both.
 
-Given two per-gate metrics records (target/gate_metrics.jsonl, one JSON
-object per gate), the compared number is each gate's task CPU seconds, with
-its stage count and shuffle bytes (read + written, MB) as extra columns."""
+Given two per-gate metrics records (target/gate_metrics.jsonl, or a
+committed BASELINE_metrics_sf<x>.jsonl reference; one JSON object per gate),
+the compared number is each gate's task CPU seconds, with its job and stage
+counts and shuffle bytes (read + written, MB) as extra columns."""
 import json, math, re, sys
 
 def load(p):
@@ -15,7 +16,7 @@ def load(p):
     txt = open(p).read()
     if txt.lstrip().startswith('{"gate"'):
         recs = [json.loads(l) for l in txt.splitlines() if l.strip()]
-        return {r["gate"]: (r["cpu_ns"] / 1e9, (r["stages"],
+        return {r["gate"]: (r["cpu_ns"] / 1e9, (r["jobs"], r["stages"],
                 (r["shuffle_read_bytes"] + r["shuffle_write_bytes"]) / 1048576))
                 for r in recs}
     txt = txt.replace("\\", "")
@@ -39,13 +40,13 @@ rows = [(k, a[k], b[k], a[k] - b[k], a[k] / b[k] if b[k] > 0 else float("inf"))
         for k in common]
 rows.sort(key=lambda r: -abs(r[3]))
 head = f"{'gate':30s} {'before':>8s} {'after':>8s} {'delta':>8s} {'speedup':>8s}"
-print(head + (f" {'stages':>9s} {'shuffle MB':>17s}" if extra else ""))
+print(head + (f" {'jobs':>9s} {'stages':>9s} {'shuffle MB':>17s}" if extra else ""))
 for k, va, vb, d, r in rows:
     if abs(d) >= thr:
         line = f"{k:30s} {va:8.3f} {vb:8.3f} {d:+8.3f} {r:8.2f}x"
         if extra:
-            (sa, ma), (sb, mb) = A[k][1], B[k][1]
-            line += f" {sa:4d}>{sb:<4d} {ma:8.2f}>{mb:<8.2f}"
+            (ja, sa, ma), (jb, sb, mb) = A[k][1], B[k][1]
+            line += f" {ja:4d}>{jb:<4d} {sa:4d}>{sb:<4d} {ma:8.2f}>{mb:<8.2f}"
         print(line)
 ta, tb = sum(a[k] for k in common), sum(b[k] for k in common)
 logs = [math.log(a[k] / b[k]) for k in common if a[k] > 0 and b[k] > 0]
