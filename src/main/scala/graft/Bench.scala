@@ -1,7 +1,6 @@
 package graft
 import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.JsonNode
-import org.apache.spark.sql.SparkSession
 import graft.core.Metrics
 object Bench {
   /** Bounds of [[structuralRegressions]]: a field flags when the run's value
@@ -100,32 +99,8 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        // UTC like every other entry point (Engine/Verify/Scale):
-        // Tables.events requires it exactly for MICROS-generation parquet,
-        // and gate timestamps must render the same as the DuckDB oracle's.
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      // Shuffle/spill scratch AND the run's warehouse (staging dirs + the
-      // per-gate scratch databases live under it) on the fastest ephemeral
-      // storage available (r17: tmpfs on this RAM-rich sandbox,
-      // env-overridable) — see Engine.scratchLocalDir. The warehouse is
-      // per-run unique: concurrent dev runs must not sweep each other's
-      // staging roots.
-      graft.core.Engine.scratchLocalDir()
-        .fold(b)(d => b.config("spark.local.dir", d)
-          .config("spark.sql.warehouse.dir",
-            graft.core.Engine.scratchTempDir("graft-bench-wh-", Some(d)).toString))
-        .getOrCreate()
-    }
+    val spark = graft.core.Engine.devSession("graft-bench-wh-")
     spark.sparkContext.setLogLevel("WARN")
-    // Runtime perf confs shared by every entry point (r17: keeps the
-    // bounded typed aggregates in hash mode — Engine.perfDefaults scaladoc).
-    graft.core.Engine.perfDefaults(spark)
     // Per-gate task metrics by job tag; the listener runs off the clock.
     val metrics = new Metrics
     spark.sparkContext.addSparkListener(metrics)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,23 +10,8 @@ object Verify {
       case Array(s, o)        => (s, o, None)
       case Array(s, o, names) => (s, o, Some(names.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = {
-      val b = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-      // Same scratch-dir + scratch-warehouse + runtime perf confs as Bench
-      // (Engine scaladocs).
-      graft.core.Engine.scratchLocalDir()
-        .fold(b)(d => b.config("spark.local.dir", d)
-          .config("spark.sql.warehouse.dir",
-            graft.core.Engine.scratchTempDir("graft-verify-wh-", Some(d)).toString))
-        .getOrCreate()
-    }
+    val spark = graft.core.Engine.devSession("graft-verify-wh-")
     spark.sparkContext.setLogLevel("WARN")
-    graft.core.Engine.perfDefaults(spark)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }

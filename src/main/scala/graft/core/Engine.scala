@@ -42,6 +42,31 @@ object Engine {
     perfDefaults(s)
   }
 
+  /** The session of the entry points Bench, Verify and
+    * PlanDump: `local[SPARK_GRAFT_CPUS]` (default 4) with as many shuffle
+    * partitions, UTC like every other entry point ([[graft.core.Tables]]
+    * `events` requires it for MICROS-generation parquet, and gate
+    * timestamps must render the same as the DuckDB oracle's), no UI,
+    * shuffle/spill scratch from [[scratchLocalDir]] with a per-run scratch
+    * warehouse (named `warehousePrefix`…) under it — staging dirs and
+    * per-gate scratch databases live there, and concurrent dev runs must
+    * not sweep each other's staging roots — then [[perfDefaults]]. Each
+    * caller sets its own log level.
+    */
+  def devSession(warehousePrefix: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+    perfDefaults(scratchLocalDir()
+      .fold(b)(d => b.config("spark.local.dir", d)
+        .config("spark.sql.warehouse.dir",
+          scratchTempDir(warehousePrefix, Some(d)).toString))
+      .getOrCreate())
+  }
+
   /** Apply the per-session confs the reference sets to an externally-created
     * session (Verify/Bench create their own). Idempotent and safe on a
     * running session — only runtime-mutable confs are touched.

@@ -4,7 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.ScopedStorage
 import graft.functions.{GraftFunctions, Kernels}
+import graft.text.TextAnalysis
 
 /** Deduplication operators for training-data pipelines, designed around one
   * invariant: never materialize the O(n²) pair space. Every near-dup
@@ -31,40 +33,22 @@ import graft.functions.{GraftFunctions, Kernels}
   * there, and any `maxBucketSize` prefix of such a cluster still links it.
   *
   * Cache lifecycle: the near-dup entry points persist a few scoped frames
-  * (the collapse membership/reps, the verify shingle sizes — see
-  * [[collapseKeyed]]) so multi-pass plans share one materialization. The
-  * frames stay registered until [[releaseCaches]] unpersists them (a
-  * bounded registry evicts the oldest past a cap, so a long-lived
-  * application that never releases still cannot accumulate unbounded
-  * cache). Call [[releaseCaches]] once the returned pairs are materialized
-  * (collected / written); batch harnesses that already
-  * `spark.catalog.clearCache()` between queries need nothing extra.
+  * (the collapse membership/reps, the verify candidate list — see
+  * [[collapseKeyed]] and [[verifyJaccard]]) so multi-pass plans share one
+  * materialization. The frames stay registered until
+  * [[graft.core.ScopedStorage.releaseAll]] unpersists them (a bounded
+  * registry evicts the oldest past a cap, so a long-lived application that
+  * never releases still cannot accumulate unbounded cache). Call it once
+  * the returned pairs are materialized (collected / written); batch
+  * harnesses that already `spark.catalog.clearCache()` between queries
+  * need nothing extra.
+  *
+  * Within-corpus and cross-corpus (`*Against`) operators share one copy of
+  * each step: [[verifyJaccard]] over two shingle sides, the capped band
+  * joins [[bucketPairs]] / [[bucketPairsBetween]], the within-corpus
+  * [[fanOut]], and the cross-corpus skeleton [[pairsAgainst]].
   */
 object Dedup {
-
-  // Scoped persists route through the shared gate-scoped registry
-  // ([[graft.core.ScopedStorage]]), which also tracks the checkpointed
-  // frames other modules return (CC labels, TF-IDF tables, …) — one
-  // release point for ALL executor-storage state a gate pins.
-  private[dedup] def scopedPersist(df: DataFrame): DataFrame =
-    graft.core.ScopedStorage.persist(df)
-
-  /** Release every gate-scoped frame registered since the last call
-    * (persists AND checkpoints, asynchronous eviction) — kept as the
-    * dedup-facing name for existing callers; delegates to
-    * [[graft.core.ScopedStorage.releaseAll]]. Returns the number of
-    * frames released.
-    *
-    * CONTRACT CHANGE from the pre-registry version (which unpersisted
-    * lineage-backed caches only and was safe at any time): the registry
-    * also frees LOCAL-CHECKPOINT blocks — including frames RETURNED by
-    * other operators (connected-component labels, TF-IDF tables, …) —
-    * and a freed checkpoint cannot be recomputed. Call this only at a
-    * query boundary, after every result you still need is materialized
-    * (counted / written), exactly like [[graft.core.ScopedStorage
-    * .releaseAll]] whose release-safety contract this inherits.
-    */
-  def releaseCaches(): Int = graft.core.ScopedStorage.releaseAll()
 
   /** Split a 64-bit signature column into per-band bucket rows. The band
     * hash is computed AFTER the explode from the materialized `sig` column:
@@ -85,8 +69,7 @@ object Dedup {
     * with id_a < id_b, one row per ordered member pair per bucket.
     *
     * ONE aggregation does the whole bucket phase: a bounded
-    * first-max-by-id collector ([[graft.functions.CollectMinK]] over
-    * struct(id, payload…) — lexicographic order = id order, ids unique)
+    * first-max-by-id collector ([[cappedBuckets]])
     * gathers each bucket's capped member list on the bucket's single
     * exchange, and pairs are then generated SCAN-LOCALLY from the sorted
     * array (posexplode × suffix-slice — each pair streams through the two
@@ -101,22 +84,54 @@ object Dedup {
     * still contributes at most max·(max-1)/2 pairs — now the exact
     * first-max-by-id members rather than a hash-sampled subset.
     */
-  private[dedup] def bucketPairs(banded: DataFrame, max: Int): DataFrame = {
-    GraftFunctions.register(banded.sparkSession)
-    val payload = banded.columns.filterNot(Set("id", "band_idx", "band_hash")).toSeq
-    val member = struct(col("id") +: payload.map(col): _*)
-    val buckets = banded.groupBy("band_idx", "band_hash")
-      .agg(GraftFunctions.collectMinK(member, max).as("__ms"))
-    buckets
+  private[dedup] def bucketPairs(banded: DataFrame, max: Int): DataFrame =
+    cappedBuckets(banded, max, "__ms")
       .select(col("__ms"), posexplode(col("__ms")).as(Seq("__i", "__a")))
       // pos is 0-based, slice start is 1-based: the suffix strictly after
       // __a starts at __i + 2; slice clamps past the array end.
       .select(col("__a"),
         explode(slice(col("__ms"), col("__i") + lit(2), lit(max))).as("__b"))
-      .select(col("__a.id").as("id_a") +: col("__b.id").as("id_b") +:
-        payload.flatMap(c =>
-          Seq(col(s"__a.$c").as(s"${c}_a"), col(s"__b.$c").as(s"${c}_b"))): _*)
+      .select(memberPairs(banded): _*)
+
+  /** Two-sided capped bucket join: candidate pairs (id_a, id_b, payload_a…,
+    * payload_b…) of an `a` row and a `b` row sharing any (band_idx,
+    * band_hash) bucket, both inputs shaped as for [[bucketPairs]]. Each
+    * side's bucket membership is capped to its first `max` members by id
+    * on that side's single bucket exchange, so a hot bucket contributes
+    * ≤ max² pairs, never |bucket_A| × |bucket_B|, and pairs are generated
+    * scan-locally from the two capped arrays. A pair sharing several
+    * buckets comes once per bucket: callers take the distinct.
+    */
+  private def bucketPairsBetween(bandedA: DataFrame, bandedB: DataFrame,
+      max: Int): DataFrame =
+    cappedBuckets(bandedA, max, "__as")
+      .join(cappedBuckets(bandedB, max, "__bs"), Seq("band_idx", "band_hash"))
+      .select(explode(col("__as")).as("__a"), col("__bs"))
+      .select(col("__a"), explode(col("__bs")).as("__b"))
+      .select(memberPairs(bandedA): _*)
+
+  private def payloadOf(banded: DataFrame): Seq[String] =
+    banded.columns.filterNot(Set("id", "band_idx", "band_hash")).toSeq
+
+  /** One row per (band_idx, band_hash) bucket of a banded frame (id,
+    * band_idx, band_hash, payload…): its first `max` members
+    * struct(id, payload…) by id, as `out` — lexicographic order is id
+    * order, ids being unique.
+    */
+  private def cappedBuckets(banded: DataFrame, max: Int, out: String): DataFrame = {
+    GraftFunctions.register(banded.sparkSession)
+    val member = struct(col("id") +: payloadOf(banded).map(col): _*)
+    banded.groupBy("band_idx", "band_hash")
+      .agg(GraftFunctions.collectMinK(member, max).as(out))
   }
+
+  /** (id_a, id_b, payload_a…, payload_b…) from the members `__a` and `__b`
+    * of [[cappedBuckets]] over `banded`.
+    */
+  private def memberPairs(banded: DataFrame): Seq[Column] =
+    col("__a.id").as("id_a") +: col("__b.id").as("id_b") +:
+      payloadOf(banded).flatMap(c =>
+        Seq(col(s"__a.$c").as(s"${c}_a"), col(s"__b.$c").as(s"${c}_b")))
 
   /** Output of [[collapseKeyed]]: `reps` (id, payload…) one row per
     * distinct content; `members` (id, __rep) dup-group membership, capped;
@@ -161,8 +176,10 @@ object Dedup {
     *   - the full `reps` (with payload) is persisted only when
     *     `persistReps` — set by [[collapseGroups]], whose TEXT payload
     *     callers (minhash / ngram) re-aggregate the corpus text per verify
-    *     pass; fixed-width-payload callers (simhash / embedding) consume
-    *     `reps` once and skip the cache cost. The cached footprint is the
+    *     pass, and by [[pairsAgainst]], whose reps feed the exact
+    *     pre-route and the band join; within-corpus fixed-width-payload
+    *     callers (simhash / embedding / semantic) consume `reps` once and
+    *     skip the cache cost. The cached footprint is the
     *     DEDUPED corpus — bounded by the corpus and usually far smaller.
     * `MEMORY_AND_DISK` spills, lineage is kept (an executor loss recomputes
     * partitions instead of failing the job, unlike a localCheckpoint), and
@@ -190,8 +207,8 @@ object Dedup {
       payload.map(c => first(col(c)).as(c))
     val groups = keyed.groupBy("__h1", "__h2").agg(aggs.head, aggs.tail: _*)
     val reps0 = groups.select(col("__rep").as("id") +: payload.map(col): _*)
-    val reps = if (persistReps) scopedPersist(reps0) else reps0
-    val dupGroups = scopedPersist(
+    val reps = if (persistReps) ScopedStorage.persist(reps0) else reps0
+    val dupGroups = ScopedStorage.persist(
       groups.filter(col("__n") > 1).select("__rep", "__ids"))
     val members = dupGroups
       .select(col("__rep"), explode(col("__ids")).as("id"))
@@ -225,10 +242,27 @@ object Dedup {
     */
   private[dedup] def collapseGroups(docs: DataFrame, idCol: String,
       contentCol: String, maxGroupSize: Int): Collapsed =
-    collapseKeyed(
-      docs.select(col(idCol).as("id") +: hashKeys(Seq(col(contentCol))) :+
-        col(contentCol): _*),
+    collapseKeyed(keyedBy(docs, idCol, col(contentCol), col(contentCol)),
       maxGroupSize, persistReps = true)
+
+  /** (id, __h1, __h2, payload): the input shape of [[collapseKeyed]], with
+    * the content keys over `content`.
+    */
+  private def keyedBy(df: DataFrame, idCol: String, content: Column,
+      payload: Column): DataFrame = {
+    GraftFunctions.register(df.sparkSession)
+    df.select(col(idCol).as("id") +: hashKeys(Seq(content)) :+ payload: _*)
+  }
+
+  /** [[keyedBy]] the text, its SimHash signature as the `sig` payload. */
+  private def simhashKeyed(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    keyedBy(df, idCol, col(textCol),
+      GraftFunctions.simhash64(TextAnalysis.tokens(col(textCol))).as("sig"))
+
+  /** [[keyedBy]] the vector, its sign-projection signature as `sig`. */
+  private def signKeyed(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    keyedBy(df, idCol, col(vecCol),
+      GraftFunctions.signProjection(col(vecCol)).as("sig"))
 
   /** Fan representative-level near-dup pairs back out to member ids. The
     * caller appends one IDENTITY pair (rep, rep, selfScore) per dup group
@@ -404,7 +438,7 @@ object Dedup {
     // verify anti-join) would otherwise each re-run the reference
     // aggregation — a full extra pass over the multi-TB reference this
     // API targets.
-    val refKeys = scopedPersist(reference
+    val refKeys = ScopedStorage.persist(reference
       .select(hashKeys(referenceCols.map(col)): _*)
       .distinct())
     // An empty reference has nothing to scrub (and stat.bloomFilter's
@@ -437,7 +471,7 @@ object Dedup {
     * cross-corpus dedup) inherits the fix with no caller changes.
     */
   def shingles(text: Column, n: Int): Column =
-    GraftFunctions.bindArray(split(trim(text), "\\s+")) { toks =>
+    GraftFunctions.bindArray(TextAnalysis.tokens(text)) { toks =>
       val starts = sequence(lit(1), greatest(size(toks) - (n - 1), lit(1)))
       array_distinct(
         transform(starts, i => concat_ws(" ", slice(toks, i, lit(n)))))
@@ -494,47 +528,60 @@ object Dedup {
     sigs.select(col("id"), posexplode(array(bands: _*)).as(Seq("band_idx", "band_hash")))
   }
 
-  private def bucketJoinPairs(banded: DataFrame, maxBucketSize: Int): DataFrame =
-    bucketPairs(banded, maxBucketSize)
-      .select("id_a", "id_b")
-      .distinct()
-
-  /** Exact Jaccard for candidate pairs via shingle co-occurrence — touches
-    * only candidate docs' shingles, never the corpus square.
+  /** Exact Jaccard for candidate pairs (id_a, id_b) over two shingle sides
+    * `a` and `b` (id, sh) — touches only candidate docs' shingles, never
+    * the corpus square. A within-corpus join passes the same frame as both
+    * sides; a cross-corpus join passes each corpus's shingles, id_a
+    * indexing `a` and id_b indexing `b`.
     *
-    * The shingle table is first restricted to ids that appear in a
-    * candidate pair (semi-join): candidates are bounded by the bucket caps,
-    * so the id set broadcasts and the whole verify phase — the per-doc size
-    * aggregation AND both intersection joins — runs over candidate docs'
-    * shingles only, scan-local, instead of shuffling the full corpus
-    * shingle table (O(docs × shingles) rows) three times. If the candidate
-    * set ever outgrows the broadcast threshold, AQE falls back to a
-    * shuffled semi-join — no worse than the unfiltered aggregation was.
+    * Both sides are first restricted to the ids of either candidate column
+    * (semi-join): candidates are bounded by the bucket caps, so the id set
+    * broadcasts and the whole verify phase — the per-doc size aggregation
+    * AND both intersection joins — runs over candidate docs' shingles
+    * only, scan-local, instead of shuffling the full shingle table
+    * (O(docs × shingles) rows) three times. With one frame on both sides
+    * the two restricted sides, and their size aggregates, are one subtree.
+    * If the candidate set ever outgrows the broadcast threshold, AQE falls
+    * back to a shuffled semi-join — no worse than the unfiltered
+    * aggregation was. Every candidate pair that shares a shingle comes
+    * back, with the Jaccard [[allPairsJaccard]] gives it.
     */
-  def verifyJaccard(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int, candidates: DataFrame): DataFrame = {
+  def verifyJaccard(a: DataFrame, b: DataFrame, candidates: DataFrame): DataFrame = {
     // The candidate pair list is consumed three times below (id set + both
     // intersection joins) and its generation pipeline (banding + bucket
     // aggregation) is the expensive part — persist it (bounded by the
     // bucket caps, so the footprint is pairs, not corpus; scoped — see
-    // releaseCaches).
-    val cand = scopedPersist(candidates)
+    // the Dedup header).
+    val cand = ScopedStorage.persist(candidates)
     val candIds = cand
       .select(explode(array(col("id_a"), col("id_b"))).as("id"))
       .distinct()
-    val sh = shingleRows(docs, idCol, textCol, shingleSize)
-      .join(candIds, Seq("id"), "left_semi")
-    val sizes = sh.groupBy("id").agg(count(lit(1)).as("n"))
-    val inter = cand
-      .join(sh.toDF("id_a", "sh"), "id_a")
-      .join(sh.toDF("id_b", "sh"), Seq("id_b", "sh"))
+    val shA = a.join(candIds, Seq("id"), "left_semi")
+    val shB = b.join(candIds, Seq("id"), "left_semi")
+    def sizes(sh: DataFrame) = sh.groupBy("id").agg(count(lit(1)).as("n"))
+    cand
+      .join(shA.toDF("id_a", "sh"), "id_a")
+      .join(shB.toDF("id_b", "sh"), Seq("id_b", "sh"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_inter"))
-    inter
-      .join(sizes.toDF("id_a", "n_a"), "id_a")
-      .join(sizes.toDF("id_b", "n_b"), "id_b")
+      .join(sizes(shA).toDF("id_a", "n_a"), "id_a")
+      .join(sizes(shB).toDF("id_b", "n_b"), "id_b")
       .select(col("id_a"), col("id_b"),
         (col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter"))).as("jaccard"))
+  }
+
+  /** The verify step of minhash and n-gram Jaccard: exact Jaccard of the
+    * candidate reps kept at ≥ `threshold`, plus one identity pair per dup
+    * group at 1.0 (identical text's exact measure), fanned out to members.
+    */
+  private def jaccardFanOut(c: Collapsed, textCol: String, n: Int,
+      candidates: DataFrame, threshold: Double): DataFrame = {
+    val sh = shingleRows(c.reps, "id", textCol, n)
+    val repPairs = verifyJaccard(sh, sh, candidates)
+      .filter(col("jaccard") >= threshold)
+      .unionByName(c.dupReps.select(col("__rep").as("id_a"),
+        col("__rep").as("id_b"), lit(1.0).as("jaccard")))
+    fanOut(repPairs, c.members)
   }
 
   /** Ground-truth pair set: exact Jaccard for EVERY pair of docs sharing at
@@ -573,12 +620,9 @@ object Dedup {
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
     val c = collapseGroups(docs, idCol, textCol, cfg.maxBucketSize)
     val sigs = minhashSignatures(c.reps, "id", textCol, cfg)
-    val candidates = bucketJoinPairs(bandedSignatures(sigs, cfg), cfg.maxBucketSize)
-    val repPairs = verifyJaccard(c.reps, "id", textCol, cfg.shingleSize, candidates)
-      .filter(col("jaccard") >= cfg.threshold)
-      .unionByName(c.dupReps.select(col("__rep").as("id_a"),
-        col("__rep").as("id_b"), lit(1.0).as("jaccard")))
-    fanOut(repPairs, c.members)
+    val candidates = bucketPairs(bandedSignatures(sigs, cfg), cfg.maxBucketSize)
+      .select("id_a", "id_b").distinct()
+    jaccardFanOut(c, textCol, cfg.shingleSize, candidates, cfg.threshold)
   }
 
   /** Cross-corpus NEAR-dup pairs: corpus docs whose text is near-identical
@@ -591,63 +635,32 @@ object Dedup {
     * representative) pair; drop matched ids from the corpus for the
     * filter use-case.
     *
-    * Scale shape mirrors [[minhashNearDupPairs]], two-sided: the corpus
-    * collapses to distinct content ([[collapseGroups]] — a boilerplate doc
-    * with 100M copies is signed once and its match fans back out to
-    * members), the reference collapses via [[exact]] (min ref id per
-    * distinct content); byte-identical cross matches are pre-routed
-    * through a 128-bit hash equi-join at jaccard 1.0 — a recall guarantee
-    * the LSH bucket caps cannot erode. The band join is
-    * per-bucket capped on BOTH sides (≤ max² candidate pairs per bucket,
-    * never |corpus bucket| × |ref bucket|), and verification touches only
-    * candidate docs' shingles. Nothing anywhere is quadratic in either
-    * corpus.
+    * Scale shape mirrors [[minhashNearDupPairs]], two-sided, through
+    * [[pairsAgainst]]: the corpus collapses to distinct content (a
+    * boilerplate doc with 100M copies is signed once and its match fans
+    * back out to members), the reference collapses via [[exact]] (min ref
+    * id per distinct content); byte-identical cross matches are pre-routed
+    * through a 128-bit hash equi-join — a recall guarantee the LSH bucket
+    * caps cannot erode — and verify at Jaccard exactly 1.0. The band join
+    * is per-bucket capped on BOTH sides (≤ max² candidate pairs per
+    * bucket, never |corpus bucket| × |ref bucket|), and verification
+    * touches only candidate docs' shingles. Nothing anywhere is quadratic
+    * in either corpus. A null text has no shingles and matches nothing.
     */
   def minhashNearDupPairsAgainst(corpus: DataFrame, idCol: String, textCol: String,
       reference: DataFrame, refIdCol: String, refTextCol: String,
       cfg: MinHashConfig = MinHashConfig()): DataFrame = {
-    val c = collapseGroups(corpus, idCol, textCol, cfg.maxBucketSize)
-    val refReps = exact(
-      reference.select(col(refIdCol).as("ref_id"), col(refTextCol).as("__rtext")),
-      Seq("__rtext"), Seq(col("ref_id")))
-    // Byte-identical pre-route: 16-byte hash pairs on both sides, equi-join
-    // — these matches are GUARANTEED found (immune to the LSH bucket caps)
-    // regardless of how byte-dup-heavy the crawl is.
-    // Persisted like refKeyed below: three consumers (exact pre-route join,
-    // corpusReps → signatures, corpusReps → verification) would otherwise
-    // each re-derive the corpus collapse + 128-bit hashing — at 100 TB that
-    // is the whole corpus scanned three times.
-    val repKeyed = scopedPersist(c.reps.select(
-      col("id") +: col(textCol) +: hashKeys(Seq(col(textCol))): _*))
-    val refKeyed = scopedPersist(refReps.select(
-      col("ref_id") +: col("__rtext") +:
-        hashKeys(Seq(col("__rtext"))): _*))
-    val exactPairs = repKeyed.join(refKeyed, Seq("__h1", "__h2"))
-      .select(col("id"), col("ref_id"), lit(1.0).as("jaccard"))
-    // LSH over ALL corpus reps (an exactly-matched doc can still NEAR-match
-    // a different ref); exact pairs rediscovered by verification compute
-    // jaccard = 1.0 exactly, so the max-merge below collapses duplicates.
-    val corpusReps = repKeyed.select("id", textCol)
-    val candidates = bucketPairsBetween(
-      bandedSignatures(minhashSignatures(corpusReps, "id", textCol, cfg), cfg),
-      bandedSignatures(
-        minhashSignatures(refKeyed, "ref_id", "__rtext", cfg), cfg)
-        .withColumnRenamed("id", "ref_id"),
-      cfg.maxBucketSize)
-    val nearPairs = verifyJaccardBetween(corpusReps, textCol,
-      refKeyed.select(col("ref_id"), col("__rtext")), "__rtext",
-      cfg.shingleSize, candidates)
-      .filter(col("jaccard") >= cfg.threshold)
-    // Fan rep-level matches out to corpus members (identical content ⇒
-    // identical jaccard); `members` holds dup groups only, so left join
-    // with the rep itself as fallback.
-    val repPairs = exactPairs.unionByName(nearPairs)
-      .groupBy("id", "ref_id").agg(max(col("jaccard")).as("jaccard"))
-    repPairs
-      .join(c.members.select(col("__rep").as("id"), col("id").as("__m")),
-        Seq("id"), "left")
-      .select(coalesce(col("__m"), col("id")).as("id"),
-        col("ref_id"), col("jaccard"))
+    val n = cfg.shingleSize
+    val ref = keyedBy(distinctText(reference, refIdCol, refTextCol), "id",
+      col("__text"), col("__text"))
+    pairsAgainst(keyedBy(corpus, idCol, col(textCol), col(textCol).as("__text")),
+      ref, cfg.maxBucketSize)(
+      df => bandedSignatures(minhashSignatures(df, "id", "__text", cfg), cfg)) {
+      (reps, refs, candidates) =>
+        verifyJaccard(shingleRows(reps, "id", "__text", n),
+          shingleRows(refs, "id", "__text", n), candidates)
+          .filter(col("jaccard") >= cfg.threshold)
+    }
   }
 
   /** The filter use-case of [[minhashNearDupPairsAgainst]]: the corpus with
@@ -658,17 +671,23 @@ object Dedup {
     */
   def dropNearDupsAgainst(corpus: DataFrame, idCol: String, textCol: String,
       reference: DataFrame, refIdCol: String, refTextCol: String,
-      cfg: MinHashConfig = MinHashConfig()): DataFrame = {
-    val matched = minhashNearDupPairsAgainst(corpus, idCol, textCol,
-      reference, refIdCol, refTextCol, cfg)
-      .select(col("id").as(idCol)).distinct()
-    // Removal must be TOTAL past the member-enumeration cap: the pair
-    // fan-out lists at most maxBucketSize ids per identical-content group,
-    // but every byte-identical copy of a matched doc matches the same
-    // reference — so translate matched ids to their CONTENT identity and
-    // anti-join on that (the group's rep is always among the matched ids
-    // and carries the identity for every copy, enumerated or not).
-    val keyed = corpus.select(col("*") +: hashKeys(Seq(col(textCol))): _*)
+      cfg: MinHashConfig = MinHashConfig()): DataFrame =
+    dropMatched(corpus, idCol, textCol, minhashNearDupPairsAgainst(
+      corpus, idCol, textCol, reference, refIdCol, refTextCol, cfg))
+
+  /** The corpus without every row `pairs` (id, ref_id, score) matched.
+    * Removal must be TOTAL past the member-enumeration cap: the pair
+    * fan-out lists at most maxBucketSize ids per identical-content group,
+    * but every byte-identical copy of a matched row matches the same
+    * reference — so matched ids translate to their `contentCol` identity
+    * and the anti-join runs on that (the group's rep is always among the
+    * matched ids and carries the identity for every copy, enumerated or
+    * not).
+    */
+  private def dropMatched(corpus: DataFrame, idCol: String, contentCol: String,
+      pairs: DataFrame): DataFrame = {
+    val matched = pairs.select(col("id").as(idCol)).distinct()
+    val keyed = corpus.select(col("*") +: hashKeys(Seq(col(contentCol))): _*)
     val matchedKeys = keyed
       .join(matched, Seq(idCol), "left_semi")
       .select("__h1", "__h2").distinct()
@@ -676,50 +695,59 @@ object Dedup {
       .drop("__h1", "__h2")
   }
 
-  /** Two-sided capped bucket join: candidate (id, ref_id) pairs sharing any
-    * (band_idx, band_hash) bucket, each side's bucket membership capped to
-    * its first `max` members by id ([[graft.functions.CollectMinK]] on each
-    * side's single bucket exchange) — a hot bucket contributes ≤ max²
-    * pairs, never |bucket_A| × |bucket_B|, and pairs are generated
-    * scan-locally from the two capped arrays.
-    */
-  private def bucketPairsBetween(bandedA: DataFrame, bandedB: DataFrame,
-      max: Int): DataFrame = {
-    GraftFunctions.register(bandedA.sparkSession)
-    def capped(banded: DataFrame, idName: String) =
-      banded.groupBy("band_idx", "band_hash")
-        .agg(GraftFunctions.collectMinK(col(idName), max).as(s"__${idName}s"))
-    capped(bandedA, "id").join(capped(bandedB, "ref_id"),
-        Seq("band_idx", "band_hash"))
-      .select(explode(col("__ids")).as("id"), col("__ref_ids"))
-      .select(col("id"), explode(col("__ref_ids")).as("ref_id"))
-      .distinct()
-  }
+  /** One reference row per distinct text: (id = the min ref id, __text). */
+  private def distinctText(reference: DataFrame, refIdCol: String,
+      refTextCol: String): DataFrame =
+    exact(reference.select(col(refIdCol).as("id"), col(refTextCol).as("__text")),
+      Seq("__text"), Seq(col("id")))
 
-  /** Exact Jaccard between candidate cross pairs — the two-sided analog of
-    * [[verifyJaccard]]: both shingle tables are semi-join-restricted to
-    * candidate ids before the size aggregation and the intersection join.
+  /** The cross-corpus skeleton of the three `*Against` operators.
+    *
+    *   - `corpus` (id, __h1, __h2, payload…) collapses to distinct content
+    *     ([[collapseKeyed]]); a copy of the content keys rides along, so
+    *     the reps are keyed like `ref` (id, __h1, __h2, payload…). Both
+    *     are persisted: each is read by the exact pre-route, the band join
+    *     and, for minhash, the verify.
+    *   - Candidates are the byte-identical pre-route (a 16-byte hash
+    *     equi-join of reps and `ref`, immune to every bucket cap) and the
+    *     two-side-capped band join of `band` over each side, shaped as for
+    *     [[bucketPairs]]. Their union is deduplicated once. The pre-route
+    *     joins reps, not the raw corpus: a raw-corpus join materializes
+    *     (copies × matching refs) rows, quadratic under a byte-dup-heavy
+    *     crawl.
+    *   - `score` (corpus reps, reference, candidates (id_a, id_b,
+    *     payload_a…, payload_b…)) returns the kept (id_a, id_b, score)
+    *     pairs. Identical content gets its exact measure from the same
+    *     formula (Jaccard 1.0, Hamming 0, the self cosine), so the
+    *     pre-route needs no merge.
+    *   - Rep-level matches fan out to the corpus members (identical
+    *     content ⇒ identical score) as (id, ref_id, score); `members`
+    *     holds dup groups only, so the join is left with the rep itself as
+    *     fallback.
     */
-  private def verifyJaccardBetween(corpusDocs: DataFrame, corpusText: String,
-      refDocs: DataFrame, refText: String, shingleSize: Int,
-      candidates: DataFrame): DataFrame = {
-    val cand = scopedPersist(candidates)
-    val shC = shingleRows(corpusDocs, "id", corpusText, shingleSize)
-      .join(cand.select("id").distinct(), Seq("id"), "left_semi")
-    val shR = refDocs
-      .select(col("ref_id"), explode(shingles(col(refText), shingleSize)).as("sh"))
-      .join(cand.select("ref_id").distinct(), Seq("ref_id"), "left_semi")
-    val sizeC = shC.groupBy("id").agg(count(lit(1)).as("n_c"))
-    val sizeR = shR.groupBy("ref_id").agg(count(lit(1)).as("n_r"))
-    cand
-      .join(shC, "id")
-      .join(shR, Seq("ref_id", "sh"))
-      .groupBy("id", "ref_id").agg(count(lit(1)).as("n_inter"))
-      .join(sizeC, "id")
-      .join(sizeR, "ref_id")
-      .select(col("id"), col("ref_id"),
-        (col("n_inter").cast("double") /
-          (col("n_c") + col("n_r") - col("n_inter"))).as("jaccard"))
+  private def pairsAgainst(corpus: DataFrame, ref: DataFrame, max: Int)(
+      band: DataFrame => DataFrame)(
+      score: (DataFrame, DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val c = collapseKeyed(
+      corpus.withColumn("__k1", col("__h1")).withColumn("__k2", col("__h2")),
+      max, persistReps = true)
+    val reps = c.reps.withColumnRenamed("__k1", "__h1").withColumnRenamed("__k2", "__h2")
+    val refs = ScopedStorage.persist(ref)
+    val (bandA, bandB) = (band(reps), band(refs))
+    val payload = payloadOf(bandA)
+    def side(df: DataFrame, s: String) = df.select(col("id").as(s"id_$s") +:
+      col("__h1") +: col("__h2") +: payload.map(p => col(p).as(s"${p}_$s")): _*)
+    val candidates = side(reps, "a").join(side(refs, "b"), Seq("__h1", "__h2"))
+      .drop("__h1", "__h2")
+      .unionByName(bucketPairsBetween(bandA, bandB, max))
+      .distinct()
+    val repPairs = score(reps, refs, candidates)
+    val scoreCol = repPairs.columns.filterNot(Set("id_a", "id_b")).head
+    repPairs
+      .join(c.members.select(col("__rep").as("id_a"), col("id").as("__m")),
+        Seq("id_a"), "left")
+      .select(coalesce(col("__m"), col("id_a")).as("id"),
+        col("id_b").as("ref_id"), col(scoreCol))
   }
 
   // ------------------------------------------------------------ SimHash
@@ -735,21 +763,26 @@ object Dedup {
     */
   def simhashNearDupPairs(docs: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
-    val c = collapseKeyed(
-      docs.select(col(idCol).as("id") +: hashKeys(Seq(col(textCol))) :+
-        GraftFunctions.simhash64(split(trim(col(textCol)), "\\s+")).as("sig"): _*),
-      maxBucketSize)
-    val banded = bandRows(c.reps, bands = 4, bandBits = 16)
-      .select("id", "sig", "band_idx", "band_hash")
-    val repPairs = bucketPairs(banded, maxBucketSize)
-      .distinct()
-      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxDist)
-      .select("id_a", "id_b", "hamming")
+    val c = collapseKeyed(simhashKeyed(docs, idCol, textCol), maxBucketSize)
+    val repPairs = hammingPairs(
+      bucketPairs(simhashBands(c.reps), maxBucketSize).distinct(), maxDist)
       .unionByName(c.dupReps.select(col("__rep").as("id_a"),
         col("__rep").as("id_b"), lit(0).cast("int").as("hamming")))
     fanOut(repPairs, c.members)
   }
+
+  /** The 4 × 16-bit chunk bands of (id, sig, …), carrying `sig`. */
+  private def simhashBands(df: DataFrame): DataFrame =
+    bandRows(df.select("id", "sig"), bands = 4, bandBits = 16)
+
+  /** Candidate pairs (id_a, id_b, sig_a, sig_b) within `maxDist` bits, as
+    * (id_a, id_b, hamming).
+    */
+  private def hammingPairs(candidates: DataFrame, maxDist: Int): DataFrame =
+    candidates
+      .withColumn("hamming", bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
+      .filter(col("hamming") <= maxDist)
+      .select("id_a", "id_b", "hamming")
 
   /** Cross-corpus SimHash near-dup: corpus docs within Hamming distance
     * `maxDist` of ANY reference doc — the sketch-side twin of
@@ -762,56 +795,15 @@ object Dedup {
     * join), the corpus collapses exact dups, the reference collapses via
     * [[exact]], byte-identical matches pre-route through the 128-bit hash
     * equi-join (guaranteed found at hamming 0 regardless of bucket caps),
-    * and the chunk-banded join is capped on BOTH sides.
+    * and the chunk-banded join is capped on BOTH sides ([[pairsAgainst]]).
+    * A null text has no signature and matches nothing.
     */
   def simhashNearDupPairsAgainst(corpus: DataFrame, idCol: String, textCol: String,
       reference: DataFrame, refIdCol: String, refTextCol: String,
       maxDist: Int = 3, maxBucketSize: Int = 10000): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    // Content-hash copies ride the collapse as payload (identical within a
-    // group by construction) so the exact pre-route can join on them after
-    // the collapse drops the grouping keys. Both sides reuse hashKeys —
-    // re-aliased — so the formulas cannot drift apart.
-    val Seq(ch1, ch2) = hashKeys(Seq(col(textCol)))
-    val keyed = corpus.select(col(idCol).as("id") +:
-      hashKeys(Seq(col(textCol))) :+
-      GraftFunctions.simhash64(split(trim(col(textCol)), "\\s+")).as("sig") :+
-      ch1.as("__ch1") :+ ch2.as("__ch2"): _*)
-    val c = collapseKeyed(keyed, maxBucketSize)
-    val refReps = exact(
-      reference.select(col(refIdCol).as("ref_id"), col(refTextCol).as("__rtext")),
-      Seq("__rtext"), Seq(col("ref_id")))
-    val Seq(rh1, rh2) = hashKeys(Seq(col("__rtext")))
-    val refKeyed = scopedPersist(refReps.select(col("ref_id"),
-      GraftFunctions.simhash64(split(trim(col("__rtext")), "\\s+")).as("sig"),
-      rh1.as("__ch1"), rh2.as("__ch2")))
-    val exactPairs = c.reps.join(refKeyed.select("ref_id", "__ch1", "__ch2"),
-        Seq("__ch1", "__ch2"))
-      .select(col("id"), col("ref_id"), lit(0).cast("int").as("hamming"))
-    // Two-side-capped chunk-band join carrying (id, sig) structs so the
-    // hamming computes scan-locally from the capped arrays.
-    def capped(banded: DataFrame, idName: String, out: String) =
-      banded.groupBy("band_idx", "band_hash")
-        .agg(GraftFunctions.collectMinK(
-          struct(col(idName), col("sig")), maxBucketSize).as(out))
-    val nearPairs = capped(
-        bandRows(c.reps.select("id", "sig"), bands = 4, bandBits = 16),
-        "id", "__cs")
-      .join(capped(
-        bandRows(refKeyed.select("ref_id", "sig"), bands = 4, bandBits = 16),
-        "ref_id", "__rs"), Seq("band_idx", "band_hash"))
-      .select(explode(col("__cs")).as("__a"), col("__rs"))
-      .select(col("__a"), explode(col("__rs")).as("__b"))
-      .select(col("__a.id").as("id"), col("__b.ref_id").as("ref_id"),
-        bit_count(col("__a.sig").bitwiseXOR(col("__b.sig"))).as("hamming"))
-      .filter(col("hamming") <= maxDist)
-    val repPairs = exactPairs.unionByName(nearPairs)
-      .groupBy("id", "ref_id").agg(min(col("hamming")).as("hamming"))
-    repPairs
-      .join(c.members.select(col("__rep").as("id"), col("id").as("__m")),
-        Seq("id"), "left")
-      .select(coalesce(col("__m"), col("id")).as("id"),
-        col("ref_id"), col("hamming"))
+    val ref = simhashKeyed(distinctText(reference, refIdCol, refTextCol), "id", "__text")
+    pairsAgainst(simhashKeyed(corpus, idCol, textCol), ref, maxBucketSize)(
+      simhashBands)((_, _, candidates) => hammingPairs(candidates, maxDist))
   }
 
   // ------------------------------------------------------------ n-gram Jaccard
@@ -890,11 +882,7 @@ object Dedup {
         least(col("sz_a") - col("rn_a"), col("sz_b") - col("rn_b")) >=
         requiredOverlap)
       .select("id_a", "id_b").distinct()
-    val repPairs = verifyJaccard(c.reps, "id", textCol, n, candidates)
-      .filter(col("jaccard") >= threshold)
-      .unionByName(c.dupReps.select(col("__rep").as("id_a"),
-        col("__rep").as("id_b"), lit(1.0).as("jaccard")))
-    fanOut(repPairs, c.members)
+    jaccardFanOut(c, textCol, n, candidates, threshold)
   }
 
   // ------------------------------------------------------------ Embeddings
@@ -916,25 +904,41 @@ object Dedup {
     */
   def embeddingNearDupPairs(vectors: DataFrame, idCol: String, vecCol: String,
       threshold: Double = 0.95, maxBucketSize: Int = 10000): DataFrame = {
-    val c = collapseKeyed(
-      vectors.select(col(idCol).as("id") +: hashKeys(Seq(col(vecCol))) :+
-        GraftFunctions.signProjection(col(vecCol)).as("sig"): _*),
-      maxBucketSize)
-    val banded = bandRows(c.reps, bands = 4, bandBits = 16)
-      .select("id", "band_idx", "band_hash")
-    val candidates = bucketPairs(banded, maxBucketSize)
+    val c = collapseKeyed(signKeyed(vectors, idCol, vecCol), maxBucketSize)
+    val candidates = bucketPairs(signBands(c.reps), maxBucketSize)
       .select("id_a", "id_b").distinct()
-    val vecs = vectors.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val repPairs = candidates
-      .join(vecs.toDF("id_a", "vec_a"), "id_a")
-      .join(vecs.toDF("id_b", "vec_b"), "id_b")
+    cosineFanOut(c, vectors.select(col(idCol).as("id"), col(vecCol).as("vec")),
+      candidates, threshold)
+  }
+
+  /** The 4 × 16-bit sign-projection bands of (id, sig, …), ids only. */
+  private def signBands(df: DataFrame): DataFrame =
+    bandRows(df.select("id", "sig"), bands = 4, bandBits = 16)
+      .select("id", "band_idx", "band_hash")
+
+  /** Exact cosine of candidate pairs (id_a, id_b), vectors joined from
+    * `vecsA` and `vecsB` (id, vec); (id_a, id_b, cosine) at ≥ threshold.
+    */
+  private def cosinePairs(candidates: DataFrame, vecsA: DataFrame,
+      vecsB: DataFrame, threshold: Double): DataFrame =
+    candidates
+      .join(vecsA.toDF("id_a", "vec_a"), "id_a")
+      .join(vecsB.toDF("id_b", "vec_b"), "id_b")
       .withColumn("cosine", GraftFunctions.cosineSim(col("vec_a"), col("vec_b")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")
-      // Identity-pair score = the identical-vector cosine computed by the
-      // SAME kernel over the rep's own vector — bit-identical to what the
-      // uncollapsed pair would have produced (not a synthesized 1.0, which
-      // could differ in the last ulp).
+
+  /** The verify step of embedding and semantic dedup: [[cosinePairs]] of
+    * the candidate reps over `vecs` (id, vec), plus one identity pair per
+    * dup group, fanned out to members. The identity-pair score is the
+    * identical-vector cosine computed by the SAME kernel over the rep's
+    * own vector — bit-identical to what the uncollapsed pair would have
+    * produced (not a synthesized 1.0, which could differ in the last ulp)
+    * — and is subject to the same threshold.
+    */
+  private def cosineFanOut(c: Collapsed, vecs: DataFrame, candidates: DataFrame,
+      threshold: Double): DataFrame = {
+    val repPairs = cosinePairs(candidates, vecs, vecs, threshold)
       .unionByName(c.dupReps.join(vecs.toDF("__rep", "vec"), "__rep")
         .select(col("__rep").as("id_a"), col("__rep").as("id_b"),
           GraftFunctions.cosineSim(col("vec"), col("vec")).as("cosine"))
@@ -945,14 +949,15 @@ object Dedup {
   /** Cross-corpus EMBEDDING near-dup pairs — semantic decontamination:
     * corpus vectors with cosine ≥ `threshold` against ANY reference vector
     * (a benchmark / eval embedding set), the embedding analog of
-    * [[minhashNearDupPairsAgainst]] and the same candidate discipline:
-    * a byte-identity pre-route (16-byte vector-hash equi-join — identical
-    * vectors are GUARANTEED found, immune to every cap) plus a two-side-
-    * capped sign-projection band join; exact cosine verifies every
-    * candidate, so caps and banding only bound recall of NEAR pairs,
-    * never precision. Corpus-side identical vectors collapse before
-    * banding and fan back out after verification (identical vectors ⇒
-    * identical cosine).
+    * [[minhashNearDupPairsAgainst]] and the same candidate discipline
+    * ([[pairsAgainst]]): a byte-identity pre-route (16-byte vector-hash
+    * equi-join — identical vectors are GUARANTEED candidates, immune to
+    * every cap) plus a two-side-capped sign-projection band join; exact
+    * cosine verifies every candidate, so caps and banding only bound
+    * recall of NEAR pairs, never precision. Corpus-side identical vectors
+    * collapse before banding and fan back out after verification
+    * (identical vectors ⇒ identical cosine); the reference is not
+    * collapsed, so a pair comes per reference row.
     *
     * Scale shape: signatures and hash keys compute scan-locally; only
     * (id, 8-byte band keys / 16-byte identity keys) reach the candidate
@@ -965,74 +970,26 @@ object Dedup {
       vecCol: String, reference: DataFrame, refIdCol: String,
       refVecCol: String, threshold: Double = 0.95,
       maxBucketSize: Int = 10000): DataFrame = {
-    GraftFunctions.register(corpus.sparkSession)
-    // The content key rides the collapse as payload (__k1/__k2) so the
-    // byte-identity pre-route can run REP-level: the raw-corpus hash join
-    // it replaces materialized (copies × matching refs) rows — quadratic
-    // under a byte-dup-heavy crawl, violating the module's "never
-    // materialize the O(n²) pair space" invariant (the minhash twin routes
-    // rep-level for the same reason). Rep-level it is
-    // (distinct contents × matching refs); the member fan-out at the end
-    // restores per-copy pairs under the usual enumeration cap, and the
-    // drop wrapper below removes by content identity, so REMOVAL stays
-    // total past the cap.
-    val c = collapseKeyed(
-      corpus.select(col(idCol).as("id") +: hashKeys(Seq(col(vecCol))) :+
-        GraftFunctions.signProjection(col(vecCol)).as("sig"): _*)
-        .withColumn("__k1", col("__h1")).withColumn("__k2", col("__h2")),
-      maxBucketSize)
-    val refKeyed = scopedPersist(reference.select(
-      col(refIdCol).as("ref_id") +: hashKeys(Seq(col(refVecCol))) :+
-        GraftFunctions.signProjection(col(refVecCol)).as("sig"): _*))
-    val candExact = c.reps
-      .select(col("id"), col("__k1").as("__h1"), col("__k2").as("__h2"))
-      .join(refKeyed.select("ref_id", "__h1", "__h2"), Seq("__h1", "__h2"))
-      .select("id", "ref_id")
-    val candLsh = bucketPairsBetween(
-      bandRows(c.reps, bands = 4, bandBits = 16)
-        .select("id", "band_idx", "band_hash"),
-      bandRows(refKeyed, bands = 4, bandBits = 16)
-        .select("ref_id", "band_idx", "band_hash"),
-      maxBucketSize)
-    val cvecs = corpus.select(col(idCol).as("id"), col(vecCol).as("__cv"))
-    val rvecs = reference.select(col(refIdCol).as("ref_id"),
-      col(refVecCol).as("__rv"))
-    // One verify pass over the candidate union: exact-pre-route candidates
-    // are cosine-verified by the same kernel (identical vectors score
-    // identically), then rep matches fan out to members.
-    val repPairs = candExact.unionByName(candLsh).distinct()
-      .join(cvecs, "id").join(rvecs, "ref_id")
-      .withColumn("cosine", GraftFunctions.cosineSim(col("__cv"), col("__rv")))
-      .filter(col("cosine") >= threshold)
-      .select("id", "ref_id", "cosine")
-    repPairs
-      .join(c.members.select(col("__rep").as("id"), col("id").as("__m")),
-        Seq("id"), "left")
-      .select(coalesce(col("__m"), col("id")).as("id"),
-        col("ref_id"), col("cosine"))
+    val cvecs = corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
+    val rvecs = reference.select(col(refIdCol).as("id"), col(refVecCol).as("vec"))
+    pairsAgainst(signKeyed(corpus, idCol, vecCol),
+      signKeyed(reference, refIdCol, refVecCol), maxBucketSize)(signBands) {
+      (_, _, candidates) => cosinePairs(candidates, cvecs, rvecs, threshold)
+    }
   }
 
   /** The filter use-case of [[embeddingNearDupPairsAgainst]]: the corpus
     * with every row semantically near a reference vector removed — scrub
-    * training embeddings against a benchmark's embedding set.
+    * training embeddings against a benchmark's embedding set. Removal
+    * extends from matched ids to their VECTOR identity, so byte-identical
+    * copies past the member-enumeration cap drop too.
     */
   def dropEmbeddingNearDupsAgainst(corpus: DataFrame, idCol: String,
       vecCol: String, reference: DataFrame, refIdCol: String,
       refVecCol: String, threshold: Double = 0.95,
-      maxBucketSize: Int = 10000): DataFrame = {
-    val matched = embeddingNearDupPairsAgainst(corpus, idCol, vecCol,
-      reference, refIdCol, refVecCol, threshold, maxBucketSize)
-      .select(col("id").as(idCol)).distinct()
-    // Same cap-immunity construction as [[dropNearDupsAgainst]]: removal
-    // extends from matched ids to their VECTOR identity, so byte-identical
-    // copies past the member-enumeration cap drop too.
-    val keyed = corpus.select(col("*") +: hashKeys(Seq(col(vecCol))): _*)
-    val matchedKeys = keyed
-      .join(matched, Seq(idCol), "left_semi")
-      .select("__h1", "__h2").distinct()
-    keyed.join(matchedKeys, Seq("__h1", "__h2"), "left_anti")
-      .drop("__h1", "__h2")
-  }
+      maxBucketSize: Int = 10000): DataFrame =
+    dropMatched(corpus, idCol, vecCol, embeddingNearDupPairsAgainst(corpus,
+      idCol, vecCol, reference, refIdCol, refVecCol, threshold, maxBucketSize))
 
   // ------------------------------------------------------------ semantic dedup
 
@@ -1064,28 +1021,15 @@ object Dedup {
     GraftFunctions.register(vectors.sparkSession)
     val index = graft.similarity.Knn.buildIvf(
       vectors, idCol, vecCol, nlist, seed, maxIter)
-    val keyed = index.assigned.select(
-      col("neighbor_id").as("id") +:
-        hashKeys(Seq(col("neighbor_vec"))) :+ col("list_id"): _*)
-    val c = collapseKeyed(keyed, maxClusterSize)
+    val c = collapseKeyed(
+      keyedBy(index.assigned, "neighbor_id", col("neighbor_vec"), col("list_id")),
+      maxClusterSize)
     val candidates = bucketPairs(
       c.reps.withColumn("band_idx", lit(0))
         .withColumnRenamed("list_id", "band_hash"),
       maxClusterSize).select("id_a", "id_b")
-    val vecs = vectors.select(col(idCol).as("id"), col(vecCol).as("vec"))
-    val repPairs = candidates
-      .join(vecs.toDF("id_a", "vec_a"), "id_a")
-      .join(vecs.toDF("id_b", "vec_b"), "id_b")
-      .withColumn("cosine", GraftFunctions.cosineSim(col("vec_a"), col("vec_b")))
-      .filter(col("cosine") >= threshold)
-      .select("id_a", "id_b", "cosine")
-      // Same identity-pair contract as [[embeddingNearDupPairs]]: the
-      // identical-vector cosine from the same kernel, not a synthetic 1.0.
-      .unionByName(c.dupReps.join(vecs.toDF("__rep", "vec"), "__rep")
-        .select(col("__rep").as("id_a"), col("__rep").as("id_b"),
-          GraftFunctions.cosineSim(col("vec"), col("vec")).as("cosine"))
-        .filter(col("cosine") >= threshold))
-    fanOut(repPairs, c.members)
+    cosineFanOut(c, vectors.select(col(idCol).as("id"), col(vecCol).as("vec")),
+      candidates, threshold)
   }
 
   /** Semantic dedup: drop every vector that has a SMALLER-id near-duplicate
@@ -1105,7 +1049,7 @@ object Dedup {
     // Persisted: the flagged frame below feeds two consumers (the group
     // aggregate and the final join), which would otherwise re-run the
     // whole pairs pipeline.
-    val removed = scopedPersist(
+    val removed = ScopedStorage.persist(
       semanticNearDupPairs(vectors, idCol, vecCol, threshold,
         nlist, maxClusterSize, seed, maxIter)
         .select(col("id_b").as(idCol)).distinct())

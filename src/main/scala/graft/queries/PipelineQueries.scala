@@ -1093,7 +1093,8 @@ object PipelineQueries {
       |  FROM base WHERE doc_id >= 25 AND doc_id < 50""".stripMargin
 
   /** Brute-force exact word-3-gram Jaccard pairs ≥ threshold, as DuckDB SQL
-    * (mirrors Dedup.shingles/verifyJaccard semantics exactly).
+    * (mirrors [[Dedup.shingles]] and [[Dedup.verifyJaccard]] exactly — the
+    * one verify both the within-corpus and the cross-corpus operators use).
     * `sample` restricts the base corpus to doc_id < RecallSampleDocs (the
     * recall query's sf-stable sample). */
   private def bruteJaccardSql(threshold: Double, sample: Boolean = false): String =

@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -280,13 +281,37 @@ class OperatorsSpec extends AnyFunSuite {
     val someDocs = Seq((1L, "alpha beta gamma delta"),
       (2L, "alpha beta gamma delta")).toDF("doc_id", "text")
 
-    // Cross near-dup: empty reference → no pairs; empty corpus → no pairs.
-    assert(Dedup.minhashNearDupPairsAgainst(someDocs, "doc_id", "text",
-      emptyDocs.withColumnRenamed("doc_id", "ref_id"), "ref_id", "text")
-      .count() === 0)
-    assert(Dedup.minhashNearDupPairsAgainst(emptyDocs, "doc_id", "text",
-      someDocs.withColumnRenamed("doc_id", "ref_id"), "ref_id", "text")
-      .count() === 0)
+    // Cross near-dup, every operator: empty reference → no pairs; empty
+    // corpus → no pairs; both with the documented (id, ref_id, score)
+    // schema. The drop wrappers give the whole corpus back, its schema
+    // unchanged.
+    def emptySides(some: DataFrame, empty: DataFrame) = Seq(
+      (some, empty.withColumnRenamed(empty.columns.head, "ref_id")),
+      (empty, some.withColumnRenamed(some.columns.head, "ref_id")))
+    for ((c, r) <- emptySides(someDocs, emptyDocs)) {
+      for ((pairs, score) <- Seq(
+          Dedup.minhashNearDupPairsAgainst(c, "doc_id", "text", r, "ref_id", "text") -> "jaccard",
+          Dedup.simhashNearDupPairsAgainst(c, "doc_id", "text", r, "ref_id", "text") -> "hamming")) {
+        assert(pairs.columns.toSeq === Seq("id", "ref_id", score))
+        assert(pairs.count() === 0)
+      }
+      val kept = Dedup.dropNearDupsAgainst(c, "doc_id", "text", r, "ref_id", "text")
+      assert(kept.columns.toSeq === c.columns.toSeq)
+      assert(kept.count() === c.count())
+    }
+    val emptyVecs = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
+    val someVecs = Seq((1L, Array(1f, 0f)), (2L, Array(1f, 0f)))
+      .toDF("vec_id", "embedding")
+    for ((c, r) <- emptySides(someVecs, emptyVecs)) {
+      val pairs = Dedup.embeddingNearDupPairsAgainst(c, "vec_id", "embedding",
+        r, "ref_id", "embedding")
+      assert(pairs.columns.toSeq === Seq("id", "ref_id", "cosine"))
+      assert(pairs.count() === 0)
+      val kept = Dedup.dropEmbeddingNearDupsAgainst(c, "vec_id", "embedding",
+        r, "ref_id", "embedding")
+      assert(kept.columns.toSeq === c.columns.toSeq)
+      assert(kept.count() === c.count())
+    }
 
     // Range join: empty right side — inner empty, left keeps all points.
     val pts = Seq((1L, "k", 5L)).toDF("pid", "k", "p")

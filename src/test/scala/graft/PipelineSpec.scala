@@ -1,9 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Tables
+import graft.core.{ScopedStorage, Tables}
 import graft.dedup.Dedup
 import graft.functions.{GraftFunctions, Kernels}
 import graft.multimodal.Multimodal
@@ -252,14 +253,49 @@ class PipelineSpec extends AnyFunSuite {
   test("releaseCaches drains the scoped persists a near-dup run registered") {
     // A minhash run scopes ≥2 persists (collapse membership + text reps +
     // the verify candidate list); after the caller materializes the pairs,
-    // releaseCaches must free them all and report doing so — and a second
-    // call must find nothing left to free.
-    graft.dedup.Dedup.releaseCaches() // drain anything earlier tests scoped
+    // ScopedStorage.releaseAll must free them all and report doing so —
+    // and a second call must find nothing left to free.
+    ScopedStorage.releaseAll() // drain anything earlier tests scoped
     val pairs = Dedup.minhashNearDupPairs(docs, "doc_id", "text")
     pairs.count()
-    val released = graft.dedup.Dedup.releaseCaches()
+    val released = ScopedStorage.releaseAll()
     assert(released >= 2, s"expected >=2 scoped caches, released $released")
-    assert(graft.dedup.Dedup.releaseCaches() === 0)
+    assert(ScopedStorage.releaseAll() === 0)
+  }
+
+  test("verifyJaccard equals allPairsJaccard on its candidates, self and cross") {
+    import spark.implicits._
+    val sf001 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+    val shipped = Tables.documents(spark, sf001).select("doc_id", "text")
+    val docs = shipped
+      .unionByName(shipped.filter(col("doc_id") === 3L)   // planted exact copy
+        .withColumn("doc_id", lit(900000L)))
+      .unionByName(Seq((900001L, "zq1 zq2 zq3 zq4 zq5")).toDF("doc_id", "text"))
+    val truth = Dedup.allPairsJaccard(docs, "doc_id", "text", shingleSize = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // Near pairs, every pair among the first 20 docs (most share a few
+    // shingles), the planted copy, and a pair with no shared shingle.
+    val near = truth.filter(_._2 >= 0.3).keys.toSeq
+    val some = for (a <- 0L until 20L; b <- a + 1 until 20L) yield (a, b)
+    val cand = (near ++ some :+ (3L, 900000L) :+ (0L, 900001L)).distinct
+    assert(truth((3L, 900000L)) === 1.0)
+    assert(!truth.contains((0L, 900001L)))
+    val expected = cand.flatMap(p => truth.get(p).map(p -> _)).toMap
+    assert(expected.size > near.size && expected.size < cand.size)
+
+    val sh = docs.select(col("doc_id").as("id"),
+      explode(Dedup.shingles(col("text"), 3)).as("sh"))
+    def run(a: DataFrame, b: DataFrame, pairs: Seq[(Long, Long)]) =
+      Dedup.verifyJaccard(a, b, pairs.toDF("id_a", "id_b"))
+        .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+    // Self form: one frame on both sides.
+    assert(run(sh, sh, cand) === expected)
+    // Cross form: the b side in a disjoint id space.
+    val shift = 10000000L
+    val crossed = run(sh, sh.withColumn("id", col("id") + shift),
+      cand.map { case (a, b) => (a, b + shift) })
+    assert(crossed === expected.map { case ((a, b), j) => (a, b + shift) -> j })
+    ScopedStorage.releaseAll()
   }
 
   test("vecMean: exact pooling, null rows skipped, ragged dims rejected") {
